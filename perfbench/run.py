@@ -4,14 +4,15 @@
         --seed N --seconds S --trace 0|1
 
 Run from the repository root.  One closed-loop client in one Python process
-on ``local[k]`` (k = min(4, nproc)).  Set-up starts the session, builds the
-seeded fixtures and runs untimed warm-up iterations; then a fixed number of
-iterations (about ``--seconds`` worth) run back to back, and each one's
-output is checked.  The last line of standard output is one JSON object:
-end-to-end metrics with ``--trace 0``, per-layer metrics (from spans around
-each public call) with ``--trace 1``.  Everything the run writes stays under ``.perfbench-runs/``;
-its artifact (environment, sizes, every sample, checks and spans) is kept
-in ``.perfbench-runs/artifacts/``.
+on ``local[k]`` (k = min(the workload's cores, nproc)).  Set-up starts the
+session, builds the seeded fixtures and runs untimed warm-up iterations,
+all but the first pinned with the Spark JVM to k CPUs; then iterations run
+back to back for ``--seconds`` (at least ``MIN_ITERATIONS`` of them), and
+each one's output is checked.  The last line of standard output is one JSON
+object: end-to-end metrics with ``--trace 0``, per-layer metrics (from
+spans around each public call) with ``--trace 1``.  Everything the run
+writes stays under ``.perfbench-runs/``; its artifact (environment, sizes,
+every sample, checks and spans) is kept in ``.perfbench-runs/artifacts/``.
 """
 
 from __future__ import annotations
@@ -33,13 +34,22 @@ import traceback  # noqa: E402
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "datapipeline_omnichanneltobigquery_spark"
-MAX_CORES = 4
-DRIVER_MEM = "2g"
-MIN_ITERATIONS = 5
-# Timed iterations per run = max(MIN_ITERATIONS, seconds / ITERATION_S).  A
-# count fixed by --seconds, not by how many iterations fit, keeps every run
-# at the same point of the JVM's warm-up curve.
-ITERATION_S = 2.0
+DRIVER_MEM = "1g"
+MIN_ITERATIONS = 4
+# The Spark JVM compiles with C1 only, and early: C2, or C1 at its default
+# thresholds, is still speeding up after 10-15 iterations, so timed
+# iterations would fall on a slope whose position depends on how busy the
+# host was.  C1's default 48m code cache fills after about ten query passes
+# and is flushed, and the passes that recompile run up to 50 % slower, so
+# the cache is larger and never flushed.  A fixed heap and two GC threads
+# keep the JVM's own threads from competing with the measured ones.
+JVM_OPTIONS = (
+    "-XX:TieredStopAtLevel=1 -XX:Tier3InvocationThreshold=4"
+    " -XX:Tier3MinInvocationThreshold=2 -XX:Tier3CompileThreshold=40"
+    " -XX:Tier3BackEdgeThreshold=500"
+    " -XX:ReservedCodeCacheSize=256m -XX:-UseCodeCacheFlushing"
+    f" -Xms{DRIVER_MEM} -XX:ParallelGCThreads=2 -XX:ConcGCThreads=1"
+)
 
 END_TO_END_UNITS = {
     "setup_s": "s",
@@ -131,7 +141,7 @@ def prepare_env(work_dir: str) -> None:
         [
             "--conf spark.ui.showConsoleProgress=false",
             "--driver-java-options",
-            shlex.quote(f"-Djava.io.tmpdir={tmp} -XX:TieredStopAtLevel=1"),
+            shlex.quote(f"-Djava.io.tmpdir={tmp} {JVM_OPTIONS}"),
             "pyspark-shell",
         ]
     )
@@ -156,6 +166,42 @@ def shutdown(spark) -> None:
             proc.wait()
 
 
+def cpu_times() -> tuple[int, int]:
+    """(stolen, total) CPU ticks of the host so far, from ``/proc/stat``;
+    (0, 0) where there is none.  Steal is the time a virtual machine's CPUs
+    waited for the hypervisor: a busy host, not a slower program."""
+    try:
+        with open("/proc/stat") as f:
+            ticks = [int(x) for x in f.readline().split()[1:]]
+    except (OSError, ValueError):
+        return 0, 0
+    return (ticks[7] if len(ticks) > 7 else 0), sum(ticks[:8])
+
+
+def pin_tree(cpus: list[int]) -> None:
+    """Pin every thread of this process and of its descendants (the Spark
+    JVM and its Python workers) to ``cpus``; threads and processes they
+    start later inherit the pinning."""
+    children: dict[int, list[int]] = {}
+    for entry in os.listdir("/proc"):
+        if entry.isdigit():
+            try:
+                with open(f"/proc/{entry}/stat") as f:
+                    ppid = int(f.read().rsplit(")", 1)[1].split()[1])
+            except (OSError, ValueError, IndexError):
+                continue  # the process ended meanwhile
+            children.setdefault(ppid, []).append(int(entry))
+    todo = [os.getpid()]
+    while todo:
+        pid = todo.pop()
+        todo.extend(children.get(pid, []))
+        try:
+            for tid in os.listdir(f"/proc/{pid}/task"):
+                os.sched_setaffinity(int(tid), cpus)
+        except OSError:
+            continue  # the process or thread ended meanwhile
+
+
 def run_iteration(wl, ctx, traced: bool) -> tuple[object, str | None]:
     """One iteration plus its check; a raised error fails the iteration."""
     try:
@@ -169,24 +215,34 @@ def run_iteration(wl, ctx, traced: bool) -> tuple[object, str | None]:
     return it, wl.check(ctx, it)
 
 
-def measure(wl, ctx, probe, seconds: int, trace: bool) -> dict:
+def measure(wl, ctx, probe, seconds: int, trace: bool, pin: list[int]) -> dict:
     warm_errors, warm_s = [], []
-    for _ in range(wl.warmups):
+    for i in range(wl.warmups):
+        if i == 1:
+            # The session start and the cold first iteration, mostly class
+            # loading and JIT compilation, run on every CPU; the rest on
+            # ``pin``.  On a virtual machine a hand-off to an idle CPU waits
+            # until the host runs that CPU again; fewer CPUs, fewer waits.
+            pin_tree(pin)
         it, err = run_iteration(wl, ctx, False)
         warm_s.append(it.seconds if it is not None else None)
         if err:
             warm_errors.append(err)
     setup_s = time.perf_counter() - PROCESS_START
 
-    n = max(MIN_ITERATIONS, round(seconds / ITERATION_S))
-    n_plain = max(1, n // 2) if trace else n
+    # untraced iterations for --seconds (half of it when traced iterations
+    # follow), then as many traced ones as untraced
     samples: dict[str, list[float]] = {}
     untraced, traced, errors = [], [], []
-    for _ in range(n_plain):
+    steal0, total0 = cpu_times()
+    min_n = (MIN_ITERATIONS + 1) // 2 if trace else MIN_ITERATIONS
+    until = time.perf_counter() + (seconds / 2 if trace else seconds)
+    while len(untraced) < min_n or time.perf_counter() < until:
         it, err = run_iteration(wl, ctx, False)
         untraced.append(it)
         errors.append(err)
-    for _ in range(n - n_plain if trace else 0):
+    steal1, total1 = cpu_times()
+    for _ in range(len(untraced) if trace else 0):
         gc0 = probe.gc_seconds()
         it, err = run_iteration(wl, ctx, True)
         traced.append(it)
@@ -212,6 +268,7 @@ def measure(wl, ctx, probe, seconds: int, trace: bool) -> dict:
         "warmup_s": warm_s,
         "errors": [e for e in errors if e],
         "samples": samples,
+        "steal_frac": (steal1 - steal0) / max(1, total1 - total0),
     }
     if trace:
         untraced_s = statistics.median(samples.get("run_s") or [0.0])
@@ -254,8 +311,10 @@ def main() -> int:
     os.makedirs(work_dir)
     prepare_env(work_dir)
     load_at_start = os.getloadavg()
-    nproc = len(os.sched_getaffinity(0))
-    k = min(MAX_CORES, nproc)
+    cpus = sorted(os.sched_getaffinity(0))
+    nproc = len(cpus)
+    wl = WORKLOADS[args.workload]()
+    k = min(wl.cores, nproc)
 
     import pyspark
 
@@ -275,11 +334,10 @@ def main() -> int:
         probe = SparkProbe(spark)
         tracer = Tracer(probe)
         ctx = Ctx(spark, tracer, args.seed, work_dir, warehouse)
-        wl = WORKLOADS[args.workload]()
         t0 = time.perf_counter()
         wl.setup(ctx)
         fixture_s = time.perf_counter() - t0
-        res = measure(wl, ctx, probe, args.seconds, bool(args.trace))
+        res = measure(wl, ctx, probe, args.seconds, bool(args.trace), cpus[:k])
         versions = probe.versions()
     finally:
         shutdown(spark)
@@ -301,8 +359,11 @@ def main() -> int:
         "trace": args.trace,
         "k": k,
         "nproc": nproc,
+        "pinned_cpus": cpus[:k],
         "load_at_start": load_at_start,
+        "steal_frac": res["steal_frac"],
         "driver_mem": DRIVER_MEM,
+        "jvm_options": JVM_OPTIONS,
         "versions": {
             **versions,
             "pyspark": pyspark.__version__,
@@ -329,7 +390,7 @@ def main() -> int:
         json.dump(artifact, f, indent=1, default=str)
 
     print(f"# {args.workload} seed={args.seed} trace={args.trace} local[{k}] nproc={nproc} "
-          f"load={load_at_start[0]:.2f} sizes={json.dumps(wl.sizes())}")
+          f"load={load_at_start[0]:.2f} steal={res['steal_frac']:.3f} sizes={json.dumps(wl.sizes())}")
     for name, m in metrics.items():
         print(f"{name:40s} {m['value']:>16.6g} {m['unit']:8s} q1={m['q1']:.6g} q3={m['q3']:.6g} n={m['n']}")
     print(f"check: {res['attempted'] - res['failed']}/{res['attempted']} iterations correct"

@@ -170,6 +170,7 @@ class FetchLoad:
     """``run_pipeline(action="new")`` over the seeded in-process deals API."""
 
     name = "fetch_load"
+    cores = 4  # one task per page: every core fetches
     warmups = 2
     table = "deals"
 
@@ -301,6 +302,7 @@ class MergeUpsert:
     new, so after the warm-up's merge main is a fixed point."""
 
     name = "merge_upsert"
+    cores = 4
     warmups = 2
     table = "main"
 
@@ -412,7 +414,13 @@ class QueryMix:
     under its own spans; an iteration is one pass over :data:`MIX`."""
 
     name = "query_mix"
-    warmups = 3
+    # A pass runs about a dozen tasks; its time is the driver planning and
+    # scheduling, and many hand-offs between Python, the driver and the
+    # executor.  On one CPU no hand-off waits for an idle virtual CPU to
+    # be run again; with 10-15 % of the host's CPU time stolen, those waits
+    # made passes on four CPUs 45-110 % slower.
+    cores = 1
+    warmups = 6
 
     def setup(self, ctx: Ctx) -> None:
         from datapipeline_omnichanneltobigquery_spark.plans import persistence
