@@ -23,6 +23,20 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
 
 
+def _default_driver_memory() -> str:
+    """Half the host's ``MemTotal`` (``/proc/meminfo``), capped at 64g: the
+    local-mode driver JVM holds every executor too, so a heap larger than
+    the host lets it grow until the kernel kills it.  Hosts without
+    ``/proc/meminfo`` get the cap."""
+    cap_mb = 64 * 1024
+    try:
+        with open("/proc/meminfo") as f:
+            total_kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return f"{cap_mb}m"
+    return f"{min(total_kb // 2048, cap_mb)}m"
+
+
 # Spark's RocksDB-backed streaming state store: state lives off-heap in a
 # local RocksDB instance (changelog-checkpointed to the checkpoint location)
 # instead of the default in-memory HDFSBackedStateStoreProvider map.  At real
@@ -73,7 +87,10 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # local mode = driver-only JVM; this is the one memory knob.  Applied
         # only when this call actually launches the JVM (no-op afterwards).
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
     )
     if rocksdb_state_store:
         builder = builder.config(

@@ -5,7 +5,8 @@ Maps omnichannel_to_bq.py:125-201 onto the Spark catalog:
 * ``import_to_table`` (CSV load, autodetect, WRITE_TRUNCATE, :143-165)
   → :func:`overwrite_table` — a direct ``saveAsTable(mode='overwrite')``,
   keeping the types that were just cast instead of round-tripping text;
-* staging→MERGE→drop lifecycle (:296-301) → :func:`upsert_into_table`;
+* staging→MERGE→drop lifecycle (:296-301) → :func:`upsert_into_table`, whose
+  merge-and-swap :func:`merge_into_table` the streaming upsert shares;
 * ``list_tables`` (:132-141) → ``spark.catalog.listTables``;
 * ``drop_table`` (not_found_ok, :193-201) → ``DROP TABLE IF EXISTS``;
 * post-load COUNT(*) verification (:159, :186) → :func:`row_count`.
@@ -63,33 +64,46 @@ def overwrite_table(df: DataFrame, name: str, partition_by: list[str] | None = N
     return row_count(df.sparkSession, name)
 
 
+def merge_into_table(
+    spark: SparkSession,
+    increment: DataFrame,
+    main_table: str,
+    key: str = "id",
+    dedupe_by: str | None = None,
+) -> None:
+    """MERGE ``increment`` into ``main_table`` on ``key`` (:176-182) and
+    write-new-then-swap the result in under the main name.
+
+    The merge is the anti-join + union plan of
+    :func:`datapipeline_omnichanneltobigquery_spark.operators.upsert.upsert`
+    with the increment broadcast; ``dedupe_by`` keeps the latest row per key
+    within the increment.  The write of ``<main>__merged`` has read all of
+    main before :func:`swap_table` renames it.  Crash-safe, not
+    reader-atomic (see :func:`swap_table`).
+    """
+    merged = upsert(
+        spark.table(main_table),
+        increment,
+        key=key,
+        broadcast_staging=True,
+        dedupe_staging_by=dedupe_by,
+    )
+    merged.write.mode("overwrite").format("parquet").saveAsTable(f"{main_table}__merged")
+    swap_table(spark, main_table, f"{main_table}__merged")
+
+
 def upsert_into_table(
     spark: SparkSession,
     staging_df: DataFrame,
     main_table: str,
     key: str = "id",
     staging_table: str = "__staging",
-    broadcast_staging: bool = True,
 ) -> int:
-    """The full reference update path (:296-301): write staging, MERGE into
-    main on ``key``, drop staging; returns the merged row count (:186).
-
-    The merge itself is the anti-join + union plan from
-    :func:`datapipeline_omnichanneltobigquery_spark.operators.upsert.upsert`;
-    the result replaces the main table via write-new-then-swap (read → plan
-    → write staged → :func:`swap_table`) — crash-safe, though not
-    reader-atomic (see :func:`swap_table`).
-    """
+    """The full reference update path (:296-301): write staging,
+    :func:`merge_into_table` on ``key``, drop staging; returns the merged
+    row count (:186)."""
     staging_df.write.mode("overwrite").format("parquet").saveAsTable(staging_table)
-    staging = spark.table(staging_table)
-    main = spark.table(main_table)
-    merged = upsert(main, staging, key=key, broadcast_staging=broadcast_staging)
-    # Materialize before swapping out the table the plan reads from.
-    merged.cache()
-    merged.count()
-    merged.write.mode("overwrite").format("parquet").saveAsTable(f"{main_table}__merged")
-    swap_table(spark, main_table, f"{main_table}__merged")
-    merged.unpersist()
+    merge_into_table(spark, spark.table(staging_table), main_table, key=key)
     drop_table(spark, staging_table)
     return row_count(spark, main_table)
 

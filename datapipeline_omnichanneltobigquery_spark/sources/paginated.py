@@ -30,6 +30,26 @@ from pyspark.sql.types import StructType
 PageFn = Callable[[int], list[dict]]
 
 
+def _with_retries(fetch_page: PageFn, max_retries: int) -> Callable[[int], list[dict] | None]:
+    """The reference's per-page retry (:38-57) around ``fetch_page``: the
+    returned function gives a page's records, or ``None`` once
+    ``max_retries`` attempts have all raised.
+
+    It is a closure, not a module-level function, so Spark pickles it by
+    value into :func:`paginated_to_df`'s tasks: executors never import this
+    package."""
+
+    def fetch(page: int) -> list[dict] | None:
+        for _ in range(max_retries):
+            try:
+                return fetch_page(page)
+            except Exception:
+                pass
+        return None
+
+    return fetch
+
+
 def fetch_paginated(
     fetch_page: PageFn,
     count: int = 500,
@@ -41,26 +61,17 @@ def fetch_paginated(
     Returns the accumulated records.  ``max_pages`` is a safety valve the
     reference lacks (it can loop forever on a misbehaving API).
     """
+    fetch = _with_retries(fetch_page, max_retries)
     all_objs: list[dict] = []
     page = 1
     while max_pages is None or page <= max_pages:
-        data = None
-        retries = 0
-        while retries < max_retries:
-            try:
-                data = fetch_page(page)
-                if not data:
-                    return all_objs  # empty page → done (:46-48)
-                all_objs.extend(data)
-                page += 1
-                break
-            except Exception:
-                retries += 1
-                data = None
-        if data is None:
-            break  # retries exhausted → partial result (:55-57)
+        data = fetch(page)
+        if not data:
+            break  # retries exhausted → partial result (:55-57); empty page → done (:46-48)
+        all_objs.extend(data)
         if len(data) < count:
             break  # short page → done (:58-59)
+        page += 1
     return all_objs
 
 
@@ -69,132 +80,30 @@ def paginated_to_df(
     fetch_page: PageFn,
     n_pages: int,
     schema: StructType | str,
-    count: int = 500,
     max_retries: int = 10,
 ) -> DataFrame:
     """Distributed page fetch: each executor task pulls a slice of pages.
 
     ``fetch_page`` must be picklable (a module-level function or closure over
     simple state).  Per-page retry/best-effort semantics match the reference;
-    an exhausted page yields no rows rather than failing the job.
+    an exhausted page yields no rows rather than failing the job.  Each
+    record is projected onto the declared fields: a missing field loads as
+    NULL and an undeclared one is dropped.
     """
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    fields = schema.fieldNames()
+    fetch = _with_retries(fetch_page, max_retries)
 
     def fetch_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for page in pdf["id"].tolist():
-                page = int(page) + 1  # spark.range is 0-based; pages are 1-based
-                retries = 0
-                while retries < max_retries:
-                    try:
-                        data = fetch_page(page)
-                        if data:
-                            yield pd.DataFrame(data)
-                        break
-                    except Exception:
-                        retries += 1
+                # spark.range is 0-based; pages are 1-based
+                data = fetch(int(page) + 1)
+                if data:
+                    yield pd.DataFrame.from_records(data, columns=fields)
 
     # One page per task: page fetches are network-bound, so fine-grained
     # tasks keep executors busy and let stragglers be retried independently.
     pages = spark.range(0, n_pages, numPartitions=max(1, n_pages))
     return pages.mapInPandas(fetch_partition, schema=schema)
-
-
-# ---------------------------------------------------------------------------
-# First-class Spark source (Python Data Source API, Spark 4)
-# ---------------------------------------------------------------------------
-
-try:  # pyspark >= 4
-    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
-    _HAS_DATASOURCE_API = True
-except ImportError:  # pragma: no cover - pyspark 3.x
-    _HAS_DATASOURCE_API = False
-
-
-def _resolve_page_fn(spec: str) -> PageFn:
-    """Import a module-level page function from a ``module:function`` spec.
-
-    Data-source options are strings, so the page fetcher is named, not
-    pickled — each executor imports it locally (also how a real REST source
-    would construct its HTTP client per worker instead of shipping one)."""
-    import importlib
-
-    mod_name, _, fn_name = spec.partition(":")
-    if not fn_name:
-        raise ValueError(f"page_fn must be 'module:function', got {spec!r}")
-    return getattr(importlib.import_module(mod_name), fn_name)
-
-
-if _HAS_DATASOURCE_API:
-
-    class PaginatedRestDataSource(DataSource):
-        """``spark.read.format("paginated_rest")`` — the reference's REST
-        pagination (omnichannel_to_bq.py:33-61) as a first-class Spark
-        source instead of a helper around mapInPandas.
-
-        Options:
-
-        * ``page_fn`` (required): ``module:function`` page fetcher, imported
-          on each executor; ``function(page) -> list[dict]``, raising on
-          transient failure (the reference's requests exception).
-        * ``n_pages`` (required): page count — one input partition per page,
-          so a 1000-executor cluster pulls 1000 pages concurrently and rows
-          stream straight into the scan, never through the driver.
-        * ``max_retries`` (default 10): per-page retry budget; an exhausted
-          page contributes zero rows — the reference's best-effort partial
-          fetch (:55-57, :61).
-
-        The user-facing schema comes from ``.schema(...)`` on the reader
-        (explicit, like every production API ingestion here — autodetect
-        re-inference is the reference's CSV-path bug, not a feature)."""
-
-        @classmethod
-        def name(cls) -> str:
-            return "paginated_rest"
-
-        def schema(self) -> str:
-            raise ValueError(
-                "paginated_rest requires an explicit .schema(...) — "
-                "schema inference would re-fetch the API"
-            )
-
-        def reader(self, schema) -> "PaginatedRestReader":
-            return PaginatedRestReader(schema, self.options)
-
-    class PaginatedRestReader(DataSourceReader):
-        def __init__(self, schema, options) -> None:
-            self._schema = schema
-            self._fn_spec = options.get("page_fn")
-            if not self._fn_spec:
-                raise ValueError("paginated_rest requires option 'page_fn'")
-            self._n_pages = int(options.get("n_pages", "0"))
-            if self._n_pages <= 0:
-                raise ValueError("paginated_rest requires option 'n_pages' > 0")
-            self._max_retries = int(options.get("max_retries", "10"))
-
-        def partitions(self) -> list:
-            # one partition per page: network-bound fetches want fine-grained
-            # tasks (independent straggler retry, full fan-out)
-            return [InputPartition(p + 1) for p in range(self._n_pages)]
-
-        def read(self, partition):
-            fetch_page = _resolve_page_fn(self._fn_spec)
-            fields = [f.name for f in self._schema.fields]
-            retries = 0
-            while retries < self._max_retries:
-                try:
-                    data = fetch_page(partition.value)
-                    for rec in data:
-                        yield tuple(rec.get(f) for f in fields)
-                    return
-                except Exception:
-                    retries += 1
-            # retries exhausted -> this page contributes nothing (partial ok)
-
-
-def register_paginated_source(spark: SparkSession) -> None:
-    """Register :class:`PaginatedRestDataSource` for this session, enabling
-    ``spark.read.format("paginated_rest")``."""
-    if not _HAS_DATASOURCE_API:  # pragma: no cover
-        raise NotImplementedError("Python Data Source API needs pyspark >= 4")
-    spark.dataSource.register(PaginatedRestDataSource)

@@ -3,12 +3,13 @@
 The reference's update path (staging → MERGE → drop,
 omnichannel_to_bq.py:296-301) run continuously: each micro-batch of changes
 merges into the main table by key.  ``foreachBatch`` hands every micro-batch
-to the SAME batch upsert the rest of the engine uses — one code path, batch
-and streaming.
+to :func:`~datapipeline_omnichanneltobigquery_spark.sinks.catalog.merge_into_table`,
+the merge-and-swap the batch update path uses — one code path, batch and
+streaming.
 
 Scale notes: per-batch the main table is read and rewritten; on a real
 deployment the main table lives in a format with transactional MERGE
-(Delta/Iceberg) and the body of ``_merge_batch`` becomes ``MERGE INTO`` —
+(Delta/Iceberg) and the body of ``merge_into_table`` becomes ``MERGE INTO`` —
 the orchestration (dedupe batch, broadcast increment, key semantics) is
 unchanged.  Batches are deduped keep-latest first so a batch containing the
 same key twice applies deterministically.
@@ -19,8 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-from datapipeline_omnichanneltobigquery_spark.operators.upsert import upsert
-from datapipeline_omnichanneltobigquery_spark.sinks.catalog import swap_table
+from datapipeline_omnichanneltobigquery_spark.sinks.catalog import merge_into_table
 
 
 def streaming_upsert(
@@ -42,24 +42,8 @@ def streaming_upsert(
     caller_spark = changes.sparkSession
 
     def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        main = spark.table(main_table)
-        merged = upsert(
-            main,
-            batch_df,
-            key=key,
-            broadcast_staging=True,
-            dedupe_staging_by=order_col,
-        )
-        merged.cache()
-        merged.count()
-        merged.write.mode("overwrite").format("parquet").saveAsTable(f"{main_table}__next")
-        # backup-rename swap: crash-safe (old data survives as __backup
-        # until the new name is live), not reader-atomic — see
-        # sinks.catalog.swap_table
-        swap_table(spark, main_table, f"{main_table}__next")
+        merge_into_table(batch_df.sparkSession, batch_df, main_table, key=key, dedupe_by=order_col)
         caller_spark.catalog.refreshTable(main_table)
-        merged.unpersist()
 
     writer = changes.writeStream.foreachBatch(_merge_batch).option(
         "checkpointLocation", checkpoint_dir

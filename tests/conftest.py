@@ -1,14 +1,7 @@
 from __future__ import annotations
 
-import os
-
 import duckdb
 import pytest
-
-# Per-run id for test scratch files that must be visible to Spark python
-# workers (separate processes): set BEFORE the JVM starts so executors
-# inherit it, letting concurrent runs on one checkout use disjoint paths.
-os.environ.setdefault("SPARK_GRAFT_TEST_RUN_ID", str(os.getpid()))
 
 from datapipeline_omnichanneltobigquery_spark.session import get_spark
 from datapipeline_omnichanneltobigquery_spark.sources.tables import TABLES

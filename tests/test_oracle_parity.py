@@ -156,6 +156,8 @@ def test_oracle_parity(spark, duck, name):
 
 
 def test_every_query_runs(spark):
-    for name, fn in _ALL_QUERIES.items():
-        df = fn(spark, SF_DIR)
+    """Queries without an oracle must still run; the rest already run in
+    test_oracle_parity."""
+    for name in sorted(set(_ALL_QUERIES) - set(_ALL_ORACLES)):
+        df = _ALL_QUERIES[name](spark, SF_DIR)
         assert df.count() >= 0, name

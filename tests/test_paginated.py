@@ -59,64 +59,53 @@ def test_distributed_page_fetch(spark):
     def fetch(page: int) -> list[dict]:
         return [{"id": page * 10 + i} for i in range(3)] if page <= 4 else []
 
-    df = paginated_to_df(spark, fetch, n_pages=6, schema="id long", count=3)
+    df = paginated_to_df(spark, fetch, n_pages=6, schema="id long")
     got = sorted(r["id"] for r in df.collect())
     assert got == sorted(p * 10 + i for p in range(1, 5) for i in range(3))
 
 
-# module-level page functions for the Data Source API tests: data-source
-# options are strings, so the source imports these by "module:function"
-# name on each executor (python workers are separate processes — the
-# function must be importable, not pickled).
-def ds_pages(page: int) -> list[dict]:
-    if page > 4:
-        return []
-    return [{"id": page * 10 + i, "name": f"r{page}_{i}"} for i in range(3)]
+def test_distributed_page_fetch_projects_declared_fields(spark):
+    """Records are projected onto the declared fields: a field a page's
+    records lack loads as NULL, an undeclared field is dropped."""
+
+    def fetch(page: int) -> list[dict]:
+        return [{"id": 1, "name": "a", "extra": True}] if page == 1 else [{"id": 2}]
+
+    df = paginated_to_df(spark, fetch, 2, "id long, name string")
+    assert df.columns == ["id", "name"]
+    assert sorted(map(tuple, df.collect())) == [(1, "a"), (2, None)]
 
 
-def ds_pages_page2_broken(page: int) -> list[dict]:
-    if page == 2:
-        raise TimeoutError("transient")
-    return ds_pages(page)
+def _named_pages(broken_page: int | None = None):
+    """Pages 1-4 of three named records, page 5+ empty; ``broken_page``
+    always raises.  A closure, so executors receive it pickled by value
+    (they cannot import this test module)."""
+
+    def fetch(page: int) -> list[dict]:
+        if page == broken_page:
+            raise TimeoutError("transient")
+        if page > 4:
+            return []
+        return [{"id": page * 10 + i, "name": f"r{page}_{i}"} for i in range(3)]
+
+    return fetch
 
 
-def test_datasource_paginated_rest_reads_all_pages(spark):
-    """The Python Data Source form: one input partition per page, rows
-    streamed from executors, result identical to the sequential fetch."""
-    from datapipeline_omnichanneltobigquery_spark.sources.paginated import (
-        fetch_paginated,
-        register_paginated_source,
-    )
-
-    register_paginated_source(spark)
-    df = (
-        spark.read.format("paginated_rest")
-        .schema("id long, name string")
-        .option("page_fn", "tests.test_paginated:ds_pages")
-        .option("n_pages", "4")
-        .load()
-    )
+def test_distributed_fetch_matches_sequential_one_partition_per_page(spark):
+    """One partition per page, rows fetched on executors, result identical
+    to the sequential fetch."""
+    df = paginated_to_df(spark, _named_pages(), 4, "id long, name string")
     got = sorted((r.id, r.name) for r in df.collect())
-    seq = sorted((r["id"], r["name"]) for r in fetch_paginated(ds_pages, count=3, max_pages=4))
-    assert got == seq and len(got) == 12
+    seq = fetch_paginated(_named_pages(), count=3, max_pages=4)
+    assert got == sorted((r["id"], r["name"]) for r in seq) and len(got) == 12
     assert df.rdd.getNumPartitions() == 4  # one partition per page
 
 
-def test_datasource_paginated_rest_partial_on_exhausted_page(spark):
+def test_distributed_fetch_partial_on_exhausted_page(spark):
     """A page that fails past the retry budget yields nothing; the other
     pages still load — the reference's best-effort partial fetch."""
-    from datapipeline_omnichanneltobigquery_spark.sources.paginated import (
-        register_paginated_source,
-    )
-
-    register_paginated_source(spark)
-    df = (
-        spark.read.format("paginated_rest")
-        .schema("id long, name string")
-        .option("page_fn", "tests.test_paginated:ds_pages_page2_broken")
-        .option("n_pages", "4")
-        .option("max_retries", "2")
-        .load()
+    df = paginated_to_df(
+        spark, _named_pages(broken_page=2), 4, "id long, name string", max_retries=2
     )
     pages_seen = sorted({r.id // 10 for r in df.collect()})
     assert pages_seen == [1, 3, 4]
@@ -125,44 +114,28 @@ def test_datasource_paginated_rest_partial_on_exhausted_page(spark):
 # ---------------------------------------------------------------------------
 # Socket-level HTTP tests (r5 VERDICT #5): a real in-process HTTP server
 # serving paginated JSON with injected failures, driven both through the
-# sequential fetch and through spark.read.format("paginated_rest") —
+# sequential fetch and through the distributed paginated_to_df —
 # omnichannel_to_bq.py:33-61 is the reference's whole ingestion story, so it
 # gets exercised over an actual socket, not just the injectable page fn.
 # ---------------------------------------------------------------------------
 
 import json as _json
 import threading
-import urllib.error
 import urllib.request
 from http.server import BaseHTTPRequestHandler, HTTPServer
 from urllib.parse import parse_qs, urlparse
 
-# Executors are separate processes, so the server port travels through a
-# file (data-source options are strings).  The path derives from this
-# file's location (works on any checkout) plus a per-run suffix from
-# SPARK_GRAFT_TEST_RUN_ID (set in conftest BEFORE the JVM starts, so
-# executor workers inherit it) — concurrent runs don't race on one file.
 
+def _http_page_fn(port: int):
+    """Page fetcher for the test server: GET /items?page=N, raising on HTTP
+    5xx (the reference's requests exception → retry signal).  A closure over
+    the port, so executors receive it pickled with the task."""
 
-def _port_file() -> str:
-    import os
+    def fetch(page: int) -> list[dict]:
+        with urllib.request.urlopen(f"http://127.0.0.1:{port}/items?page={page}", timeout=10) as r:
+            return _json.loads(r.read().decode())
 
-    run_id = os.environ.get("SPARK_GRAFT_TEST_RUN_ID", "0")
-    return os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        ".scratch",
-        f"http_test_port.{run_id}",
-    )
-
-
-def http_page_fn(page: int) -> list[dict]:
-    """Module-level page fetcher the data source imports on executors:
-    GET /items?page=N against the test server, raising on HTTP 5xx (the
-    reference's requests exception → retry signal)."""
-    with open(_port_file()) as f:
-        port = int(f.read().strip())
-    with urllib.request.urlopen(f"http://127.0.0.1:{port}/items?page={page}", timeout=10) as r:
-        return _json.loads(r.read().decode())
+    return fetch
 
 
 class _PagedHandler(BaseHTTPRequestHandler):
@@ -172,6 +145,7 @@ class _PagedHandler(BaseHTTPRequestHandler):
 
     fail_plan: dict[int, int] = {}
     hits: dict[int, int] = {}
+    port: int = 0
 
     def do_GET(self):  # noqa: N802 (stdlib naming)
         page = int(parse_qs(urlparse(self.path).query)["page"][0])
@@ -203,17 +177,12 @@ class _PagedHandler(BaseHTTPRequestHandler):
 
 @pytest.fixture
 def http_api():
-    """In-process HTTP server on an ephemeral port, port published through
-    the port file; yields the handler class for fail_plan/hits access."""
-    import os
-
+    """In-process HTTP server on an ephemeral port; yields the handler class
+    for fail_plan/hits access, with the bound port as ``port``."""
     _PagedHandler.fail_plan = {}
     _PagedHandler.hits = {}
     srv = HTTPServer(("127.0.0.1", 0), _PagedHandler)
-    pf = _port_file()
-    os.makedirs(os.path.dirname(pf), exist_ok=True)
-    with open(pf, "w") as f:
-        f.write(str(srv.server_address[1]))
+    _PagedHandler.port = srv.server_address[1]
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
     try:
@@ -222,40 +191,25 @@ def http_api():
         srv.shutdown()
         t.join(timeout=5)
         srv.server_close()
-        try:  # don't accumulate per-run scratch files on disk
-            os.remove(pf)
-        except OSError:
-            pass
 
 
 def test_http_sequential_fetch_retries_then_short_page_stops(http_api):
     """Over a real socket: page 2 serves two 500s then succeeds (retry
     absorbs it), page 4 is short → termination; all 10 records arrive."""
     http_api.fail_plan = {2: 2}
-    got = fetch_paginated(http_page_fn, count=3, max_retries=5)
+    got = fetch_paginated(_http_page_fn(http_api.port), count=3, max_retries=5)
     assert sorted(r["id"] for r in got) == [10, 11, 12, 20, 21, 22, 30, 31, 32, 41]
     assert http_api.hits[2] == 3  # two failures + one success
     assert 5 not in http_api.hits  # short page 4 stopped the loop
 
 
-def test_http_datasource_retry_exhaustion_partial(spark, http_api):
-    """spark.read.format('paginated_rest') against the live server: a page
-    failing past the retry budget contributes nothing, the rest load —
-    best-effort partial over an actual socket, executor-side imports and
-    all."""
-    from datapipeline_omnichanneltobigquery_spark.sources.paginated import (
-        register_paginated_source,
-    )
-
+def test_http_distributed_fetch_retry_exhaustion_partial(spark, http_api):
+    """paginated_to_df against the live server: a page failing past the
+    retry budget contributes nothing, the rest load — best-effort partial
+    over an actual socket, fetched from executor processes."""
     http_api.fail_plan = {3: -1}
-    register_paginated_source(spark)
-    df = (
-        spark.read.format("paginated_rest")
-        .schema("id long, name string")
-        .option("page_fn", "tests.test_paginated:http_page_fn")
-        .option("n_pages", "5")
-        .option("max_retries", "2")
-        .load()
+    df = paginated_to_df(
+        spark, _http_page_fn(http_api.port), 5, "id long, name string", max_retries=2
     )
     pages_seen = sorted({r.id // 10 for r in df.collect()})
     assert pages_seen == [1, 2, 4]

@@ -2,7 +2,11 @@
 queries() entry at sf0.01 against its oracle_sql() twin in DuckDB with a
 row-count + schema + order-insensitive value compare.
 
-Usage: python tools/driver_sim.py [sf_dir] [--vanilla] [--only=name1,name2]
+Usage: python tools/driver_sim.py [sf_dir] [--vanilla] [--extras] [--only=name1,name2]
+
+``--vanilla`` runs on a bare session in the America/Los_Angeles timezone
+(the driver's worst case for timestamp rendering); ``--extras`` adds the
+pytest-only EXTRA_QUERIES with their EXTRA_ORACLES to the gated registry.
 """
 
 from __future__ import annotations
@@ -17,6 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 import __spark_entry__ as entrymod
+from datapipeline_omnichanneltobigquery_spark.plans.queries import EXTRA_ORACLES, EXTRA_QUERIES
 from datapipeline_omnichanneltobigquery_spark.session import get_spark
 from datapipeline_omnichanneltobigquery_spark.sources.tables import TABLES
 from tests.helpers import canon_rows, fetch_duckdb
@@ -57,6 +62,9 @@ def main() -> int:
 
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
+    if "--extras" in sys.argv:
+        queries = {**queries, **EXTRA_QUERIES}
+        oracles = {**oracles, **EXTRA_ORACLES}
     if only is not None:
         missing = only - set(queries)
         if missing:
