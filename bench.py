@@ -1,7 +1,21 @@
-"""Benchmark harness: run every registered query at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
-JSON line: {"metric", "value" (total sec), "unit", "queries": {name: sec},
-"sf"}.
+"""One measurement harness for the query registry.
+
+    python bench.py                         full bench of every gated query
+    python bench.py time [-nN] query [...]  min of N runs (default 3) per query
+    python bench.py plans [--extras]        rewrite PLANS.md (PLANS_EXTRAS.md)
+    python bench.py plans [--extras] --dump DIR/TAG [query ...]
+                                            write DIR/<query>_TAG.txt, the
+                                            formatted plan of each query
+                                            (default: the whole registry)
+    python bench.py floors run.json [...]   merge bench runs into
+                                            BASELINE_FLOORS.json
+
+Every subcommand that runs Spark reads $SPARK_GRAFT_SF_DIR (default
+/root/testdata/sf0.1) on one session, local[$SPARK_GRAFT_CPUS] (default 32)
+with 2x CPUS shuffle partitions; the timing ones warm it up once before the
+first measured query.  The full bench prints two JSON lines: the wide line
+{"metric", "value" (total sec), "unit", "queries": {name: sec}, "sf", ...},
+which `floors` parses, and a compact bench_summary.
 
 Queries are materialized through the noop sink — full execution of every
 expression and shuffle, zero driver-collect cost — so the timings measure
@@ -16,30 +30,82 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
-from datapipeline_omnichanneltobigquery_spark.plans.queries import QUERIES  # noqa: E402
+from pyspark.sql import DataFrame, SparkSession  # noqa: E402
+
+from datapipeline_omnichanneltobigquery_spark.plans import audit  # noqa: E402
+from datapipeline_omnichanneltobigquery_spark.plans.queries import (  # noqa: E402
+    EXTRA_QUERIES,
+    QUERIES,
+)
 from datapipeline_omnichanneltobigquery_spark.session import get_spark  # noqa: E402
 
+FLOORS_PATH = os.path.join(ROOT, "BASELINE_FLOORS.json")
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# A healthy calibration probe on this host runs 0.12-0.2 s; above this
+# the pass ran under host CPU contention (BENCH_r11's single 414.6 s
+# pass probed 0.421 s) and its timings are scheduler noise, not code.
+CAL_HEALTHY_SEC = 0.3
+# Queries between calibration probes within one pass (see run_list).
+CAL_CHUNK = 12
+# Rows with floors below this are covered by BASELINE.md's variance
+# band; rows at or above it are the ones a single contended sample can
+# make read as a multi-x regression, so they are the retry targets.
+MULTISEC_FLOOR = 1.5
 
-def main() -> int:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    spark = get_spark(
+
+def measurement_session() -> SparkSession:
+    """The one session every subcommand measures or plans on."""
+    return get_spark(
         app_name="bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=2 * int(cpus) if cpus.isdigit() else None,
+        master=f"local[{CPUS}]",
+        shuffle_partitions=2 * int(CPUS) if CPUS.isdigit() else None,
     )
 
-    # Warm the JVM/codegen once on the smallest table so the first measured
-    # query doesn't pay session startup.
-    spark.read.parquet(f"{sf_dir}/region.parquet").count()
-    spark.read.parquet(f"{sf_dir}/region.parquet").groupBy().count().collect()
+
+def warm_up(spark: SparkSession) -> None:
+    """Warm the JVM/codegen once on the smallest table so the first timed
+    query doesn't pay session startup."""
+    spark.read.parquet(f"{SF_DIR}/region.parquet").count()
+    calibrate(spark)
     # ^ second warmup = the calibration probe's own plan shape: the probe
     # measures HOST contention, and an un-warmed first probe reads ~0.45 s
     # of its own codegen cold-start — which used to mis-flag chunk 1 of
     # pass 1 as contended on an idle host.
+
+
+def calibrate(spark: SparkSession) -> float:
+    """Seconds for a 1-row aggregate: a probe of host CPU contention."""
+    t0 = time.time()
+    spark.read.parquet(f"{SF_DIR}/region.parquet").groupBy().count().collect()
+    return round(time.time() - t0, 3)
+
+
+def build(spark: SparkSession, name: str) -> DataFrame:
+    """Build a gated or pytest-only registry query at SF_DIR."""
+    return (QUERIES.get(name) or EXTRA_QUERIES[name])(spark, SF_DIR)
+
+
+def run_noop(spark: SparkSession, name: str) -> float:
+    """Build and fully execute one query through the noop sink under its own
+    job description; returns the wall seconds of both."""
+    spark.sparkContext.setJobDescription(f"bench:{name}")
+    try:
+        t0 = time.time()
+        build(spark, name).write.format("noop").mode("overwrite").save()
+        return time.time() - t0
+    finally:
+        spark.sparkContext.setJobDescription(None)
+
+
+def cmd_run() -> int:
+    """The full bench: every gated query, min of passes, two JSON lines."""
+    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
+    spark = measurement_session()
+    warm_up(spark)
 
     # Host CPU contention on this machine produces a measured 3.5x spread on
     # unchanged code (BASELINE.md), so a single run cannot separate a real
@@ -56,14 +122,6 @@ def main() -> int:
     # pass is visible in the artifact itself.
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "6"))
     budget = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_SEC", "450"))
-    # A healthy calibration probe on this host runs 0.12-0.2 s; above this
-    # the pass ran under host CPU contention (BENCH_r11's single 414.6 s
-    # pass probed 0.421 s) and its timings are scheduler noise, not code.
-    cal_healthy = float(os.environ.get("SPARK_GRAFT_BENCH_CAL_HEALTHY_SEC", "0.3"))
-    # Rows with floors below this are covered by BASELINE.md's variance
-    # band; rows at or above it are the ones a single contended sample can
-    # make read as a multi-x regression, so they are the retry targets.
-    multisec_floor = 1.5
     start = time.time()
     timings: dict[str, float] = {}
     samples: dict[str, int] = {}
@@ -77,10 +135,8 @@ def main() -> int:
     cur_pass_contended = False
 
     def run_query(name: str) -> None:
-        t0 = time.time()
         try:
-            QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            took = round(time.time() - t0, 3)
+            took = round(run_noop(spark, name), 3)
             prev = timings.get(name, -1.0)
             if prev < 0 or took < prev:
                 timings[name] = took
@@ -95,11 +151,6 @@ def main() -> int:
             timings.setdefault(name, -1.0)
             print(f"# bench FAIL {name}: {exc}", file=sys.stderr)
 
-    def calibrate() -> float:
-        t0 = time.time()
-        spark.read.parquet(f"{sf_dir}/region.parquet").groupBy().count().collect()
-        return round(time.time() - t0, 3)
-
     # Mid-pass re-probing (r14 verdict "What's wrong #4"): BENCH_r14's pass 2
     # probed healthy (0.188 s) then ran 2.4x slower than pass 1 — a single
     # pre-pass probe cannot see contention that STARTS mid-pass, so its
@@ -108,19 +159,17 @@ def main() -> int:
     # queries; per-row provenance uses the most recent probe, and a pass is
     # `contended` when ANY of its probes ran hot.  Overhead: ~4 extra probes
     # x ~0.2 s per 50-query pass.
-    cal_chunk = int(os.environ.get("SPARK_GRAFT_BENCH_CAL_CHUNK", "12"))
-
     def run_list(names: list[str]) -> list[float]:
-        """Run queries in order, re-probing calibration every cal_chunk;
+        """Run queries in order, re-probing calibration every CAL_CHUNK;
         returns the probe timings (>= 1).  Updates cur_pass_contended as it
         goes so run_query records accurate per-row provenance."""
         nonlocal cur_pass_contended
         cals: list[float] = []
         for j, name in enumerate(names):
-            if j % cal_chunk == 0:
-                c = calibrate()
+            if j % CAL_CHUNK == 0:
+                c = calibrate(spark)
                 cals.append(c)
-                cur_pass_contended = c > cal_healthy
+                cur_pass_contended = c > CAL_HEALTHY_SEC
             run_query(name)
         return cals
 
@@ -137,7 +186,7 @@ def main() -> int:
                 "calibration_sec": cals[0],
                 "calibrations_sec": cals,
                 "pass_sec": round(dur, 3),
-                "contended": any(c > cal_healthy for c in cals),
+                "contended": any(c > CAL_HEALTHY_SEC for c in cals),
             }
         )
         passes += 1
@@ -152,8 +201,8 @@ def main() -> int:
     # cheaper tail entries still use whatever budget remains.
     remaining = budget - (time.time() - start)
     if remaining > 2.0:
-        cals = [calibrate()]
-        cur_pass_contended = cals[0] > cal_healthy
+        cals = [calibrate(spark)]
+        cur_pass_contended = cals[0] > CAL_HEALTHY_SEC
         improved = 0
         for name in sorted(
             (n for n in timings if timings[n] >= 0),
@@ -162,10 +211,10 @@ def main() -> int:
         ):
             if time.time() - start + 1.5 * timings[name] > budget:
                 continue
-            if improved and improved % cal_chunk == 0:
-                c = calibrate()
+            if improved and improved % CAL_CHUNK == 0:
+                c = calibrate(spark)
                 cals.append(c)
-                cur_pass_contended = c > cal_healthy
+                cur_pass_contended = c > CAL_HEALTHY_SEC
             run_query(name)
             improved += 1
         pass_meta.append(
@@ -174,7 +223,7 @@ def main() -> int:
                 "calibration_sec": cals[0],
                 "calibrations_sec": cals,
                 "queries_rerun": improved,
-                "contended": any(c > cal_healthy for c in cals),
+                "contended": any(c > CAL_HEALTHY_SEC for c in cals),
             }
         )
 
@@ -192,19 +241,19 @@ def main() -> int:
             (
                 n
                 for n, t in timings.items()
-                if t >= multisec_floor and samples.get(n, 0) < 2
+                if t >= MULTISEC_FLOOR and samples.get(n, 0) < 2
             ),
             key=lambda n: timings[n],
             reverse=True,
         )
-        cals = run_list(rerun) if rerun else [calibrate()]
+        cals = run_list(rerun) if rerun else [calibrate(spark)]
         pass_meta.append(
             {
                 "kind": "retry_multisecond",
                 "calibration_sec": cals[0],
                 "calibrations_sec": cals,
                 "queries_rerun": len(rerun),
-                "contended": any(c > cal_healthy for c in cals),
+                "contended": any(c > CAL_HEALTHY_SEC for c in cals),
             }
         )
 
@@ -250,7 +299,7 @@ def main() -> int:
     # beside BASELINE.md) when present and at the matching scale factor.
     worst_vs_floor: list[list] = []
     try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BASELINE_FLOORS.json")) as f:
+        with open(FLOORS_PATH) as f:
             floors_doc = json.load(f)
         if floors_doc.get("sf") == sf_val:
             floors = floors_doc.get("floors", {})
@@ -283,5 +332,225 @@ def main() -> int:
     return 0
 
 
+def cmd_time(args: list[str]) -> int:
+    """Print min and all of N noop-sink runs per named query, idle."""
+    n = 3
+    if args and args[0].startswith("-n"):
+        n = int(args[0][2:])
+        args = args[1:]
+    if not args:
+        return usage()
+    spark = measurement_session()
+    warm_up(spark)
+    for name in args:
+        times = [run_noop(spark, name) for _ in range(n)]
+        print(
+            f"TIMED {name}: min={min(times):.3f} "
+            f"all=[{', '.join(f'{t:.3f}' for t in times)}]",
+            flush=True,
+        )
+    return 0
+
+
+def audit_row(spark: SparkSession, name: str) -> tuple:
+    """One PLANS.md row: the plan facts that decide 100 TB behavior."""
+    df = build(spark, name)
+    plan = audit.plan_string(df)
+    n_hints, n_flagged = audit.broadcast_hint_audit(df)
+    if n_hints == 0:
+        hint_col = "-"
+    elif n_flagged == 0:
+        hint_col = f"all {n_hints}"
+    else:
+        hint_col = f"REVIEW {n_flagged}/{n_hints}"
+    n_final, n_partial = audit.partial_agg_audit(df)
+    if n_final == 0 and n_partial == 0:
+        pagg_col = "-"
+    elif n_partial == 0:
+        pagg_col = "MISSING"
+    else:
+        pagg_col = f"{n_partial}p/{n_final}f"
+    scans = audit.file_scan_counts(df)
+    max_scans = max(scans.values()) if scans else 0
+    if max_scans > audit.MAX_FILE_SCANS_PER_SOURCE:
+        scan_col = f"REVIEW {max_scans}x {max(scans, key=scans.get)}"
+    else:
+        scan_col = str(max_scans)
+    return (
+        name,
+        audit.exchange_count(df),
+        plan.count("BroadcastHashJoin"),
+        plan.count("SortMergeJoin"),
+        # AQE hides codegen stars pre-execution: count them with AQE off
+        audit.codegen_stage_count_of(lambda s: build(s, name), spark),
+        "yes" if any(e.strip() for e in audit.pushed_filters(df)) else "-",
+        hint_col,
+        pagg_col,
+        scan_col,
+        audit.reused_exchange_count(df) or "-",
+    )
+
+
+def cmd_plans(args: list[str]) -> int:
+    """Rewrite the plan-audit table of a registry, or dump formatted plans.
+
+    The table is the '.explain and iterate' discipline as a committed
+    artifact: diffs in it are plan regressions (or improvements) made
+    visible in review, complementing the hard assertions in
+    tests/test_plans.py.  --extras audits the driver=False registry into
+    PLANS_EXTRAS.md so the whole registry's plan shapes are reviewable.
+    Queries whose builders run eager jobs still dump a plan: the file then
+    shows the post-checkpoint tail."""
+    extras = "--extras" in args
+    args = [a for a in args if a != "--extras"]
+    registry = EXTRA_QUERIES if extras else QUERIES
+    if args and (args[0] != "--dump" or len(args) < 2):
+        return usage()
+    spark = measurement_session()
+    if args:
+        out_dir, tag = os.path.split(args[1])
+        os.makedirs(out_dir or ".", exist_ok=True)
+        for name in args[2:] or sorted(registry):
+            path = os.path.join(out_dir, f"{name}_{tag}.txt")
+            # plan_string captures explain()'s print, which adds a newline
+            plan = audit.plan_string(build(spark, name)).removesuffix("\n")
+            with open(path, "w") as f:
+                f.write(plan)
+            print(f"wrote {path} ({len(plan)} bytes)")
+        return 0
+    rows = []
+    for name in sorted(registry):
+        try:
+            rows.append(audit_row(spark, name))
+        except Exception as exc:  # one broken query must not hide the table
+            rows.append((name, "ERR", "-", "-", "-", str(exc)[:40], "-", "-", "-", "-"))
+    cmd = f"SPARK_GRAFT_CPUS={CPUS} SPARK_GRAFT_SF_DIR={SF_DIR} python bench.py plans"
+    lines = [
+        (
+            "# PLANS_EXTRAS — physical-plan audit of the driver=False registry"
+            if extras
+            else "# PLANS — physical-plan audit of the 50 driver queries"
+        ),
+        "",
+        f"Generated by `{cmd}{' --extras' if extras else ''}` (plan shapes",
+        "are scale-independent; AQE may coalesce exchanges further at runtime).",
+        "Columns: shuffle exchanges (broadcast exchanges excluded), broadcast hash",
+        "joins, sort-merge joins, distinct whole-stage-codegen stages (counted",
+        "with AQE off — AQE hides codegen stars pre-execution), non-empty parquet",
+        "PushedFilters, and whether every forced broadcast hint's input is",
+        "provably bounded (limit / scalar aggregate / point filter / fixed dim —",
+        "audit.broadcast_hint_audit; `REVIEW n/m` = n of m hints force-broadcast",
+        "an input that scales with the data, each of which must be justified in",
+        "tests/test_plans.py's allowlist).  `tests/test_plans.py` asserts the",
+        "load-bearing subset; this table makes every query's shape reviewable.",
+        "",
+        "`max scans/src` = the most times the compiled plan scans any ONE file",
+        "source (audit.file_scan_counts) — the redundant-subtree detector: a",
+        "frame referenced N ways without persist/localCheckpoint recompiles N",
+        f"times from the scan.  Values > {audit.MAX_FILE_SCANS_PER_SOURCE} "
+        "print `REVIEW` and fail",
+        "tests/test_plans.py::test_no_redundant_source_scans unless",
+        "allowlisted there with a justification.  `reused exch` counts",
+        "ReusedExchange nodes (Catalyst sharing an identical shuffle subtree).",
+        "",
+        "Scale guards not visible in plan shape: the co-purchase graph",
+        "family (triangles / k-core / PageRank / LPA) derives edges through",
+        "`operators/graph.py::basket_edges`, whose |basket|^2 within-basket",
+        "fan-out raises a diagnosable error past `max_basket` (default 1000)",
+        "— the Sum(deg^2) wedge bound of triangle counting is explicit, not",
+        "assumed (the resample `max_points_per_key` / overlap bucket-cap",
+        "discipline; unit-tested in tests/test_llm_ops.py).",
+        "",
+        "| query | shuffles | bcast joins | SMJ | codegen stages | pushed filter | bcast inputs bounded? | partial agg | max scans/src | reused exch |",
+        "|---|---|---|---|---|---|---|---|---|---|",
+    ]
+    lines += ["| " + " | ".join(str(x) for x in r) + " |" for r in rows]
+    out = os.path.join(ROOT, "PLANS_EXTRAS.md" if extras else "PLANS.md")
+    with open(out, "w") as fh:
+        fh.write("\n".join(lines) + "\n")
+    print(f"wrote {out} ({len(rows)} queries)")
+    return 0
+
+
+def read_wide_line(path: str) -> dict:
+    """The first JSON line of a saved bench run that carries per-query
+    timings (the wide line cmd_run prints)."""
+    with open(path) as f:
+        for line in f:
+            line = line.strip()
+            if line.startswith("{"):
+                doc = json.loads(line)
+                if "queries" in doc:
+                    return doc
+    raise ValueError(f"no wide bench line in {path}")
+
+
+def merge_floors(paths: list[str]) -> dict:
+    """The BASELINE_FLOORS.json document of several bench runs: each query's
+    floor is its MIN across runs (runs that lack or failed it are skipped),
+    pinned to the runs' one scale factor — cmd_run applies floors only when
+    its own sf matches.  Raises ValueError on a file without a wide line or
+    on runs that disagree on sf."""
+    floors: dict[str, float] = {}
+    sfs = set()
+    sources = []
+    for path in paths:
+        doc = read_wide_line(path)
+        sfs.add(doc.get("sf"))
+        sources.append(
+            {
+                "file": os.path.basename(path),
+                "value": doc.get("value"),
+                "contended": doc.get("contended"),
+                "passes": doc.get("passes"),
+            }
+        )
+        for name, sec in doc["queries"].items():
+            if sec is None or sec < 0:
+                continue
+            prev = floors.get(name)
+            if prev is None or sec < prev:
+                floors[name] = sec
+    if len(sfs) != 1:
+        raise ValueError(f"runs disagree on sf: {sfs}")
+    return {
+        "sf": sfs.pop(),
+        "total": round(sum(floors.values()), 3),
+        "n_queries": len(floors),
+        "sources": sources,
+        "floors": dict(sorted(floors.items())),
+    }
+
+
+def cmd_floors(paths: list[str], dest: str = FLOORS_PATH) -> int:
+    """Write the merged floors of saved bench runs to ``dest``."""
+    if not paths:
+        return usage()
+    try:
+        out = merge_floors(paths)
+    except ValueError as exc:
+        print(exc, file=sys.stderr)
+        return 2
+    with open(dest, "w") as f:
+        json.dump(out, f, indent=1, sort_keys=False)
+        f.write("\n")
+    print(f"wrote {dest}: {out['n_queries']} floors, total {out['total']} s")
+    return 0
+
+
+def usage() -> int:
+    print(__doc__, file=sys.stderr)
+    return 2
+
+
+def main(argv: list[str]) -> int:
+    if not argv:
+        return cmd_run()
+    commands = {"time": cmd_time, "plans": cmd_plans, "floors": cmd_floors}
+    if argv[0] not in commands:
+        return usage()
+    return commands[argv[0]](argv[1:])
+
+
 if __name__ == "__main__":
-    raise SystemExit(main())
+    raise SystemExit(main(sys.argv[1:]))

@@ -96,16 +96,22 @@ def string_rule(col: Column) -> Column:
     return F.coalesce(col.cast("string"), F.lit(""))
 
 
+def _cast_kind(name: str) -> str:
+    """The name-driven cast policy: 'int', 'timestamp' or 'string'."""
+    low = name.lower()
+    return "int" if low in INT_COLS else "timestamp" if low in DATE_COLS else "string"
+
+
 def cast_columns(df: DataFrame) -> DataFrame:
     """Apply the full name-driven cast policy as ONE narrow projection."""
     dtypes = dict(df.dtypes)
     out = []
     for name in df.columns:
-        low = name.lower()
+        kind = _cast_kind(name)
         col = F.col(name)
-        if low in INT_COLS:
+        if kind == "int":
             out.append(int_rule(col).alias(name))
-        elif low in DATE_COLS:
+        elif kind == "timestamp":
             out.append(date_rule(col, dtypes[name]).alias(name))
         else:
             out.append(string_rule(col).alias(name))
@@ -116,9 +122,7 @@ def cast_report(df: DataFrame) -> dict[str, list[str]]:
     """Cast telemetry (:99-104) as data instead of prints."""
     report: dict[str, list[str]] = {"int": [], "timestamp": [], "string": []}
     for name in df.columns:
-        low = name.lower()
-        bucket = "int" if low in INT_COLS else "timestamp" if low in DATE_COLS else "string"
-        report[bucket].append(name)
+        report[_cast_kind(name)].append(name)
     return report
 
 

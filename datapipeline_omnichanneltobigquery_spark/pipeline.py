@@ -22,7 +22,6 @@ from datapipeline_omnichanneltobigquery_spark.operators.normalize import (
     sort_by_created_at,
 )
 from datapipeline_omnichanneltobigquery_spark.sinks.catalog import (
-    list_tables,
     overwrite_table,
     upsert_into_table,
 )
@@ -70,9 +69,8 @@ def run_pipeline(
     if action == "new":
         n = overwrite_table(df, table)
     elif action == "update":
-        existing = list_tables(spark)
-        if table not in existing:
-            raise ValueError(f"update target {table!r} not in catalog {existing}")
+        if not spark.catalog.tableExists(table):
+            raise ValueError(f"update target {table!r} not in catalog")
         n = upsert_into_table(spark, df, table, key=key, staging_table=staging_table)
     else:
         raise ValueError(f"unsupported action {action!r}")

@@ -67,3 +67,23 @@ def test_pipeline_bad_action_raises(spark):
     df = spark.createDataFrame([("1", "2024-01-01", "x")], SCHEMA)
     with pytest.raises(ValueError, match="unsupported action"):
         run_pipeline(spark, source_df=df, action="replace", table="t_x")
+
+
+def test_pipeline_update_db_qualified_table(spark):
+    """'update' accepts the db-qualified table a 'new' run created, though
+    the catalog's table listing only names tables of the current database."""
+    spark.sql("CREATE DATABASE IF NOT EXISTS crm")
+    try:
+        new = spark.createDataFrame(
+            [("1", "2024-01-01 00:00:00", "a"), ("2", "2024-01-02 00:00:00", "b")], SCHEMA
+        )
+        assert run_pipeline(spark, source_df=new, action="new", table="crm.deals").rows_loaded == 2
+        upd = spark.createDataFrame(
+            [("2", "2024-02-01 00:00:00", "CHANGED"), ("3", "2024-02-02 00:00:00", "c")], SCHEMA
+        )
+        res = run_pipeline(spark, source_df=upd, action="update", table="crm.deals", key="id")
+        assert res.rows_loaded == 3
+        got = {r["id"]: r["subject"] for r in spark.table("crm.deals").collect()}
+        assert got == {1: "a", 2: "CHANGED", 3: "c"}
+    finally:
+        spark.sql("DROP DATABASE IF EXISTS crm CASCADE")

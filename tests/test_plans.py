@@ -410,7 +410,7 @@ def test_plans_markdown_rows_match_registries():
     prose: their row sets must equal the live registries (r14 verdict —
     PLANS_EXTRAS lagged 5 families behind EXTRA_QUERIES; the live CI
     audits never lagged, but the reviewable table did).  Regenerate with
-    `python tools/plan_audit.py [--extras]` after any registry change."""
+    `python bench.py plans [--extras]` after any registry change."""
     import os
 
     from datapipeline_omnichanneltobigquery_spark.plans.queries import (
@@ -435,7 +435,7 @@ def test_baseline_floors_file_is_live():
     """BASELINE_FLOORS.json (bench.py's worst_vs_floor source) parses,
     pins a scale factor, and names only real registry entries — a
     renamed/rotated-away query must not leave a stale floor behind.
-    (Floors are re-recorded per rotation round — tools/record_floors.py —
+    (Floors are re-recorded per rotation round — `python bench.py floors` —
     so subset, not equality: a new family may lack a floor until the
     next idle re-record.)"""
     import json
