@@ -18,7 +18,6 @@ from pyspark.sql.types import StructType
 from datapipeline_omnichanneltobigquery_spark.operators.normalize import (
     cast_columns,
     cast_report,
-    preview,
     sort_by_created_at,
 )
 from datapipeline_omnichanneltobigquery_spark.sinks.catalog import (
@@ -64,7 +63,8 @@ def run_pipeline(
 
     head: list = []
     if show_preview:
-        head, _, _ = preview(df)
+        # only the head: preview()'s count() would be one more source pass
+        head = df.limit(5).collect()
 
     if action == "new":
         n = overwrite_table(df, table)

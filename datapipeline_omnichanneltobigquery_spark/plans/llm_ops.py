@@ -73,7 +73,7 @@ def dedup_keep_latest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_minhash_lsh",
-    driver=False,  # merged into dedup_neardup_pairs
+    driver=False,  # the candidate-restricted verify; dedup_neardup_pairs semi-joins instead
     oracle=dd.minhash_near_dup_pairs_sql("documents", "doc_id", "text"),
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -109,27 +109,6 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine's headline setting is the one that survives 100 TB."""
     return dd.simhash_near_dup_pairs(
         read_table(spark, sf_dir, "documents"), "doc_id", "text", max_hamming=3
-    )
-
-
-@query(
-    "dedup_ngram_jaccard",
-    driver=False,  # merged into dedup_neardup_pairs
-    oracle=dd.jaccard_pairs_sql(
-        "documents", "doc_id", "text", n=3, threshold=0.5, max_df=dd.JACCARD_MAX_DF
-    ),
-)
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact 3-gram Jaccard pairs ≥ 0.5 over the shingle inverted index,
-    candidate generation df-capped (operators.dedup.JACCARD_MAX_DF) so the
-    hot-shingle self-join stays linear under Zipfian skew."""
-    return dd.jaccard_pairs(
-        read_table(spark, sf_dir, "documents"),
-        "doc_id",
-        "text",
-        n=3,
-        threshold=0.5,
-        max_df=dd.JACCARD_MAX_DF,
     )
 
 
@@ -534,12 +513,6 @@ def similarity_quantize_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query("text_quality", driver=False, oracle=ts.text_quality_sql("documents", "doc_id", "text"))
-def text_quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc quality features + composite score (C4/Gopher-style rules)."""
-    return ts.text_quality(read_table(spark, sf_dir, "documents"), "doc_id", "text")
-
-
 @query(
     "text_quality_calibrated",
     driver=False,  # per-domain calibration face of the gated text-quality family
@@ -585,36 +558,6 @@ def text_boilerplate_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("text_lang_id", driver=False, oracle=ts.lang_id_sql("documents", "doc_id", "text"))
-def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Function-word language-ID heuristic with deterministic argmax."""
-    return ts.lang_id(read_table(spark, sf_dir, "documents"), "doc_id", "text")
-
-
-@query("text_token_counts", driver=False, oracle=ts.token_counts_sql("documents", "doc_id", "text"))
-def text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whitespace + BPE-ish regex token counts per document."""
-    return ts.token_counts(read_table(spark, sf_dir, "documents"), "doc_id", "text")
-
-
-@query("text_fingerprint", driver=False, oracle=ts.fingerprint_sql("documents", "doc_id", "text"))
-def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """60-bit md5 fingerprint of whitespace-canonicalized text."""
-    return ts.fingerprint(read_table(spark, sf_dir, "documents"), "doc_id", "text")
-
-
-@query(
-    "text_repetition",
-    driver=False,  # merged into text_profile (driver-gated there)
-    oracle=ts.repetition_stats_sql("documents", "doc_id", "text"),
-)
-def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition filters: duplicate/most-frequent token and
-    2-gram fractions — the boilerplate/spam signal absent from length and
-    alpha-ratio checks."""
-    return ts.repetition_stats(read_table(spark, sf_dir, "documents"), "doc_id", "text")
-
-
 # ---------------------------------------------------------------------------
 # Multimodal plumbing
 # ---------------------------------------------------------------------------
@@ -622,7 +565,7 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "multimodal_meta",
-    driver=False,  # merged into multimodal_png_decode
+    driver=False,  # checks modality, which multimodal_png_decode drops
     oracle="""
     SELECT doc_id,
            'image' AS modality,
@@ -714,7 +657,7 @@ def text_normalize_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Merged driver entries (one per family — see queries.DRIVER_CAP)
+# Composed entries: several operators of a family checked in one entry
 # ---------------------------------------------------------------------------
 
 _PROFILE_ORACLE = f"""

@@ -170,7 +170,7 @@ def join_multiway_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_distinct_users",
-    driver=False,  # merged into agg_grouping_multi ('distinct' branch)
+    driver=False,
     oracle="""
     SELECT event_type,
            COUNT(DISTINCT user_id) AS n_users,
@@ -191,21 +191,9 @@ def agg_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("agg_approx_distinct_users", driver=False)  # merged into agg_approx_sketches
-def agg_approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """approx_count_distinct (HyperLogLog++): the 100 TB answer to distinct
-    counting — fixed-size sketch, single pass, mergeable across partitions.
-    No SQL oracle: DuckDB's HLL implementation yields different estimates."""
-    return (
-        read_table(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(F.approx_count_distinct("user_id", rsd=0.01).alias("approx_users"))
-    )
-
-
 @query(
     "agg_rollup_returns",
-    driver=False,  # merged into agg_grouping_multi
+    driver=False,
     oracle="""
     SELECT l_returnflag, l_linestatus,
            CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
@@ -225,7 +213,7 @@ def agg_rollup_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_cube_status_priority",
-    driver=False,  # merged into agg_grouping_multi
+    driver=False,
     oracle="""
     SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders
     FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
@@ -242,7 +230,7 @@ def agg_cube_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_grouping_sets",
-    driver=False,  # merged into agg_grouping_multi
+    driver=False,
     oracle="""
     SELECT event_type, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day, COUNT(*) AS n
     FROM events GROUP BY GROUPING SETS ((event_type), (day))
@@ -386,7 +374,7 @@ def window_rank_parts_by_size(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "set_intersect_repeat_buyers",
-    driver=False,  # merged into set_ops_customers
+    driver=False,
     oracle="""
     SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1995
     INTERSECT
@@ -403,7 +391,7 @@ def set_intersect_repeat_buyers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "set_except_churned",
-    driver=False,  # merged into set_ops_customers
+    driver=False,
     oracle="""
     SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1995
     EXCEPT
@@ -447,25 +435,6 @@ def set_union_account_holders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "json_extract_props",
-    driver=False,  # merged into json_ops_suite
-    oracle="""
-    SELECT event_id,
-           TRY_CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-    FROM events
-    """,
-)
-def json_extract_props(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON path extraction over the events.props payload — the reference
-    destroys nested JSON by stringification (omnichannel_to_bq.py:96); the
-    engine models it (get_json_object / from_json)."""
-    return read_table(spark, sf_dir, "events").select(
-        "event_id",
-        F.get_json_object("props", "$.k").cast("bigint").alias("k"),
-    )
-
-
-@query(
     "json_agg_by_key",
     driver=False,  # composition of json extraction + hash agg, both driver-verified elsewhere
     oracle="""
@@ -495,7 +464,7 @@ def json_agg_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "scalar_string_suite",
-    driver=False,  # merged into text_profile (llm_ops)
+    driver=False,  # n_chars/n_alpha/n_tokens on un-lowered text, unlike text_profile
     oracle="""
     SELECT doc_id,
            lower(substr(text, 1, 20)) AS prefix20,
@@ -561,7 +530,8 @@ def scalar_date_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles (verified bitwise-equal to DuckDB's
     quantile_cont).  Exact percentile buffers each group's values — at
-    100 TB use agg_approx_percentile (fixed-size sketch) instead."""
+    100 TB use approx_percentile (fixed-size sketch, see agg_approx_sketches)
+    instead."""
     return (
         read_table(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag")
@@ -574,124 +544,10 @@ def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("agg_approx_percentile", driver=False)  # merged into agg_approx_sketches
-def agg_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """approx_percentile (KLL-style sketch): single pass, fixed memory,
-    mergeable — the percentile that scales.  Returns scalar p50/p95 columns
-    (never an array column: the driver's canonicalizer cannot sort arrays)."""
-    return (
-        read_table(spark, sf_dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(F.expr("approx_percentile(l_extendedprice, array(0.5, 0.95), 1000)").alias("approx_p"))
-        .select(
-            "l_returnflag",
-            F.element_at("approx_p", 1).alias("p50"),
-            F.element_at("approx_p", 2).alias("p95"),
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
-# Merged driver entries (one per operator family — see queries.DRIVER_CAP).
-# Each is a marker-column UNION of the fine-grained driver=False variants
-# above, so the whole family lands inside the driver's 50-entry gate.
+# Suites: one entry checks several evaluation paths of a family (marker-
+# column union or wide select) that no single-path entry checks alone.
 # ---------------------------------------------------------------------------
-
-
-@query(
-    "agg_grouping_multi",
-    driver=False,  # rotated out r4 (green r2+r3; agg family keeps 4 gated rows); slot given to corpus_prep_full
-    oracle="""
-    SELECT 'rollup' AS agg_kind, l_returnflag AS g1, l_linestatus AS g2, COUNT(*) AS n
-    FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-    UNION ALL
-    SELECT 'cube' AS agg_kind, o_orderstatus AS g1, o_orderpriority AS g2, COUNT(*) AS n
-    FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
-    UNION ALL
-    SELECT 'gsets' AS agg_kind, event_type AS g1,
-           strftime(date_trunc('day', ts), '%Y-%m-%d') AS g2, COUNT(*) AS n
-    FROM events GROUP BY GROUPING SETS ((g1), (g2))
-    UNION ALL
-    SELECT 'distinct' AS agg_kind, event_type AS g1,
-           CAST(NULL AS VARCHAR) AS g2, COUNT(DISTINCT user_id) AS n
-    FROM events GROUP BY event_type
-    """,
-)
-def agg_grouping_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP + CUBE + GROUPING SETS + COUNT DISTINCT in one driver entry
-    (marker column distinguishes the four).  Each branch is a single Expand
-    (or two-level distinct expansion) + partial/final hash aggregate over its
-    own table; the union is a no-shuffle concat."""
-    rollup = (
-        read_table(spark, sf_dir, "lineitem")
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.lit("rollup").alias("agg_kind"),
-            F.col("l_returnflag").alias("g1"),
-            F.col("l_linestatus").alias("g2"),
-            "n",
-        )
-    )
-    cube = (
-        read_table(spark, sf_dir, "orders")
-        .cube("o_orderstatus", "o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.lit("cube").alias("agg_kind"),
-            F.col("o_orderstatus").alias("g1"),
-            F.col("o_orderpriority").alias("g2"),
-            "n",
-        )
-    )
-    read_table(spark, sf_dir, "events").createOrReplaceTempView("events_gm")
-    gsets = spark.sql(
-        """
-        SELECT 'gsets' AS agg_kind, event_type AS g1,
-               date_format(date_trunc('day', ts), 'yyyy-MM-dd') AS g2, COUNT(*) AS n
-        FROM events_gm GROUP BY GROUPING SETS ((g1), (g2))
-        """
-    )
-    distinct = (
-        read_table(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(F.countDistinct("user_id").alias("n"))
-        .select(
-            F.lit("distinct").alias("agg_kind"),
-            F.col("event_type").alias("g1"),
-            F.lit(None).cast("string").alias("g2"),
-            "n",
-        )
-    )
-    return rollup.unionByName(cube).unionByName(gsets).unionByName(distinct)
-
-
-@query(
-    "set_ops_customers",
-    driver=False,  # rotated out r4 (green r2+r3; bag-semantics cousin stays gated); slot given to profile_orders
-    oracle="""
-    SELECT 'intersect' AS set_op, o_custkey FROM (
-        SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1995
-        INTERSECT
-        SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1996
-    )
-    UNION ALL
-    SELECT 'except' AS set_op, o_custkey FROM (
-        SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1995
-        EXCEPT
-        SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1996
-    )
-    """,
-)
-def set_ops_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT + EXCEPT (set semantics) in one driver entry: customers
-    active in both 1995 and 1996, and churned 1995→1996."""
-    o = read_table(spark, sf_dir, "orders")
-    y95 = o.filter(F.year("o_orderdate") == 1995).select("o_custkey")
-    y96 = o.filter(F.year("o_orderdate") == 1996).select("o_custkey")
-    inter = y95.intersect(y96).select(F.lit("intersect").alias("set_op"), "o_custkey")
-    exc = y95.subtract(y96).select(F.lit("except").alias("set_op"), "o_custkey")
-    return inter.unionByName(exc)
 
 
 @query(

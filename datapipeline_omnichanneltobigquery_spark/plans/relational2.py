@@ -138,7 +138,7 @@ def agg_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "set_except_all_lineitems",
-    driver=False,  # merged into set_bag_ops_lineitems
+    driver=False,
     oracle="""
     SELECT l_orderkey FROM lineitem WHERE l_linestatus = 'O'
     EXCEPT ALL
@@ -155,7 +155,7 @@ def set_except_all_lineitems(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "scalar_null_suite",
-    driver=False,  # merged into scalar_null_math_suite
+    driver=False,
     oracle="""
     SELECT c_custkey,
            COALESCE(NULLIF(c_mktsegment, 'MACHINERY'), 'OTHER') AS seg_or_other,
@@ -205,7 +205,7 @@ def unpivot_part_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "subquery_above_avg_orders",
-    driver=False,  # merged into subquery_suite
+    driver=False,
     oracle="""
     SELECT o_orderkey, CAST(o_totalprice AS DOUBLE) AS o_totalprice
     FROM orders
@@ -232,7 +232,7 @@ def subquery_above_avg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "subquery_correlated_max_line",
-    driver=False,  # merged into subquery_suite
+    driver=False,
     oracle="""
     SELECT o.o_orderkey,
            CAST((SELECT MAX(l.l_extendedprice) FROM lineitem l
@@ -260,7 +260,7 @@ def subquery_correlated_max_line(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "set_intersect_all_lineitems",
-    driver=False,  # merged into set_bag_ops_lineitems
+    driver=False,
     oracle="""
     SELECT l_orderkey FROM lineitem WHERE l_linestatus = 'O'
     INTERSECT ALL
@@ -303,30 +303,8 @@ def agg_collect_sorted_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "json_map_ops",
-    driver=False,  # merged into json_ops_suite (relational.py)
-    oracle="""
-    SELECT event_id, 'k' AS first_key,
-           TRY_CAST(json_extract_string(props, '$.k') AS BIGINT) AS first_val
-    FROM events
-    """,
-)
-def json_map_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MapType modeling: parse the JSON payload as map<string,bigint> and
-    read it through map functions (map_keys/element_at) — the typed-map
-    alternative to path extraction."""
-    ev = read_table(spark, sf_dir, "events")
-    m = F.from_json("props", "map<string,bigint>")
-    return ev.select(
-        "event_id",
-        F.element_at(F.map_keys(m), 1).alias("first_key"),
-        F.element_at(m, F.lit("k")).alias("first_val"),
-    )
-
-
-@query(
     "scalar_math_suite",
-    driver=False,  # merged into scalar_null_math_suite
+    driver=False,
     oracle="""
     SELECT c_custkey,
            abs(CAST(c_acctbal AS DOUBLE)) AS abs_bal,
@@ -355,128 +333,6 @@ def scalar_math_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.signum(bal).cast("bigint").alias("sign_bal"),
         (F.col("c_custkey") % 7).alias("mod7"),
         (bal * bal).alias("bal_sq"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Merged driver entries (one per family — see queries.DRIVER_CAP)
-# ---------------------------------------------------------------------------
-
-
-@query(
-    "set_bag_ops_lineitems",
-    driver=False,  # rotated out r7 (green r2-r6); set-ops family keeps 3 local-parity entries
-    oracle="""
-    SELECT 'except_all' AS set_op, l_orderkey FROM (
-        SELECT l_orderkey FROM lineitem WHERE l_linestatus = 'O'
-        EXCEPT ALL
-        SELECT l_orderkey FROM lineitem WHERE l_returnflag = 'R'
-    )
-    UNION ALL
-    SELECT 'intersect_all' AS set_op, l_orderkey FROM (
-        SELECT l_orderkey FROM lineitem WHERE l_linestatus = 'O'
-        INTERSECT ALL
-        SELECT l_orderkey FROM lineitem WHERE l_returnflag = 'N'
-    )
-    """,
-)
-def set_bag_ops_lineitems(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXCEPT ALL + INTERSECT ALL (multiset/bag semantics — duplicates
-    counted, unlike subtract/intersect) in one driver entry."""
-    li = read_table(spark, sf_dir, "lineitem")
-    o_rows = li.filter(F.col("l_linestatus") == "O").select("l_orderkey")
-    r_rows = li.filter(F.col("l_returnflag") == "R").select("l_orderkey")
-    n_rows = li.filter(F.col("l_returnflag") == "N").select("l_orderkey")
-    exc = o_rows.exceptAll(r_rows).select(F.lit("except_all").alias("set_op"), "l_orderkey")
-    inter = o_rows.intersectAll(n_rows).select(F.lit("intersect_all").alias("set_op"), "l_orderkey")
-    return exc.unionByName(inter)
-
-
-@query(
-    "scalar_null_math_suite",
-    driver=False,  # rotated out r4 (stable r2+r3); scalar_null/math extras keep coverage
-    oracle="""
-    SELECT c_custkey,
-           COALESCE(NULLIF(c_mktsegment, 'MACHINERY'), 'OTHER') AS seg_or_other,
-           LEAST(CAST(c_acctbal AS DOUBLE), 5000.0) AS capped_bal,
-           GREATEST(CAST(c_acctbal AS DOUBLE), 0.0) AS floored_bal,
-           CASE WHEN c_acctbal < 0 THEN 'debt'
-                WHEN c_acctbal < 5000 THEN 'mid'
-                ELSE 'high' END AS bal_band,
-           (c_nationkey IS NULL) AS nation_missing,
-           abs(CAST(c_acctbal AS DOUBLE)) AS abs_bal,
-           sqrt(abs(CAST(c_acctbal AS DOUBLE))) AS sqrt_bal,
-           CAST(floor(CAST(c_acctbal AS DOUBLE)) AS BIGINT) AS floor_bal,
-           CAST(ceil(CAST(c_acctbal AS DOUBLE)) AS BIGINT) AS ceil_bal,
-           CAST(sign(CAST(c_acctbal AS DOUBLE)) AS BIGINT) AS sign_bal,
-           c_custkey % 7 AS mod7,
-           CAST(c_acctbal AS DOUBLE) * CAST(c_acctbal AS DOUBLE) AS bal_sq
-    FROM customer
-    """,
-)
-def scalar_null_math_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NULL-handling + math scalar battery in one driver entry
-    (coalesce/nullif/least/greatest/CASE + IEEE-exact abs/sqrt/floor/ceil/
-    sign/mod/multiply — exp/log/pow stay out: libm last-ulp differences
-    across engines).  One narrow codegen projection, no shuffle."""
-    c = read_table(spark, sf_dir, "customer")
-    bal = F.col("c_acctbal").cast("double")
-    return c.select(
-        "c_custkey",
-        F.coalesce(F.nullif(F.col("c_mktsegment"), F.lit("MACHINERY")), F.lit("OTHER")).alias(
-            "seg_or_other"
-        ),
-        F.least(bal, F.lit(5000.0)).alias("capped_bal"),
-        F.greatest(bal, F.lit(0.0)).alias("floored_bal"),
-        F.when(bal < 0, "debt").when(bal < 5000, "mid").otherwise("high").alias("bal_band"),
-        F.col("c_nationkey").isNull().alias("nation_missing"),
-        F.abs(bal).alias("abs_bal"),
-        F.sqrt(F.abs(bal)).alias("sqrt_bal"),
-        F.floor(bal).cast("bigint").alias("floor_bal"),
-        F.ceil(bal).cast("bigint").alias("ceil_bal"),
-        F.signum(bal).cast("bigint").alias("sign_bal"),
-        (F.col("c_custkey") % 7).alias("mod7"),
-        (bal * bal).alias("bal_sq"),
-    )
-
-
-@query(
-    "subquery_suite",
-    driver=False,  # rotated out r4 (green r2+r3; family keeps local parity x3); slot given to fuzzy_part_names
-    oracle="""
-    SELECT 'above_avg' AS subq_kind, o_orderkey, CAST(o_totalprice AS DOUBLE) AS val
-    FROM orders
-    WHERE o_totalprice > (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-                                 / CAST(COUNT(*) AS DOUBLE)
-                          FROM orders)
-    UNION ALL
-    SELECT 'corr_max' AS subq_kind, o.o_orderkey,
-           CAST((SELECT MAX(l.l_extendedprice) FROM lineitem l
-                 WHERE l.l_orderkey = o.o_orderkey) AS DOUBLE) AS val
-    FROM orders o
-    WHERE year(o.o_orderdate) = 1997
-    """,
-)
-def subquery_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar + correlated subqueries in one driver entry: the global-average
-    threshold (planned as a one-row broadcast) and the per-order MAX line
-    price (de-correlated by Catalyst into a left outer aggregate join)."""
-    read_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_ss")
-    read_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_ss")
-    return spark.sql(
-        """
-        SELECT 'above_avg' AS subq_kind, o_orderkey, CAST(o_totalprice AS DOUBLE) AS val
-        FROM orders_ss
-        WHERE o_totalprice > (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-                                     / CAST(COUNT(*) AS DOUBLE)
-                              FROM orders_ss)
-        UNION ALL
-        SELECT 'corr_max' AS subq_kind, o.o_orderkey,
-               CAST((SELECT MAX(l.l_extendedprice) FROM lineitem_ss l
-                     WHERE l.l_orderkey = o.o_orderkey) AS DOUBLE) AS val
-        FROM orders_ss o
-        WHERE year(o.o_orderdate) = 1997
-        """
     )
 
 

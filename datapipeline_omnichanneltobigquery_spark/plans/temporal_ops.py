@@ -170,7 +170,7 @@ def range_join_recent_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "json_typed_struct",
-    driver=False,  # merged into json_ops_suite (relational.py)
+    driver=False,  # filters on the parsed field and carries event_type, unlike json_ops_suite
     oracle="""
     SELECT event_id,
            TRY_CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_typed,

@@ -87,3 +87,45 @@ def test_pipeline_update_db_qualified_table(spark):
         assert got == {1: "a", 2: "CHANGED", 3: "c"}
     finally:
         spark.sql("DROP DATABASE IF EXISTS crm CASCADE")
+
+
+def test_pipeline_preview_costs_one_source_pass(spark, tmp_path):
+    """show_preview takes the head in one pass over the pages (a top-k
+    over the sorted source) and no count pass; the head is the first 5
+    rows in created_at order, nulls last."""
+    log = str(tmp_path / "page_calls.log")
+    stamps = {
+        1: ["2024-01-05 00:00:00", None, "2024-01-02 00:00:00"],
+        2: ["2024-01-09 00:00:00", "2024-01-01 00:00:00", "2024-01-07 00:00:00"],
+        3: [None, "2024-01-03 00:00:00", "2024-01-06 00:00:00"],
+    }
+    n_pages = len(stamps)
+
+    def _fetch(page: int) -> list[dict]:
+        with open(log, "a") as f:
+            f.write(f"{page}\n")
+        return [
+            {"id": str(page * 10 + i), "created_at": ts, "subject": f"s{page}{i}"}
+            for i, ts in enumerate(stamps[page])
+        ]
+
+    def _calls() -> int:
+        with open(log) as f:
+            return len(f.readlines())
+
+    common = dict(fetch_page=_fetch, n_pages=n_pages, schema=SCHEMA, action="new")
+    try:
+        run_pipeline(spark, table="t_no_preview", **common)
+        plain = _calls()
+        res = run_pipeline(spark, table="t_preview", show_preview=True, **common)
+        assert _calls() - plain == plain + n_pages
+        ordered = sorted(
+            (ts, page * 10 + i)
+            for page, col in stamps.items()
+            for i, ts in enumerate(col)
+            if ts is not None
+        )
+        assert [r["id"] for r in res.head] == [i for _, i in ordered[:5]]
+    finally:
+        drop_table(spark, "t_no_preview")
+        drop_table(spark, "t_preview")
