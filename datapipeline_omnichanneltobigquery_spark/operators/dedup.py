@@ -33,6 +33,7 @@ from datapipeline_omnichanneltobigquery_spark.functions.hashing import (
     md5_long,
     md5_long_sql,
 )
+from datapipeline_omnichanneltobigquery_spark.operators.normalize import observed
 
 # ---------------------------------------------------------------------------
 # Exact + keep-latest
@@ -961,7 +962,7 @@ def connected_components_star(
         .observe(obs0, F.count(F.lit(1)).alias("n"))
         .localCheckpoint()
     )
-    prev_count = obs0.get["n"]
+    prev_count = observed(obs0)["n"]
     for it in range(max_iterations):
         stepped = _small_star(_large_star(edges))
         obs = Observation()
@@ -975,7 +976,7 @@ def connected_components_star(
             )
             .localCheckpoint()
         )
-        probe = obs.get
+        probe = observed(obs)
         edges = flagged.select("u", "v")
         if probe["n"] == prev_count and (probe["n_new"] or 0) == 0:
             if stats is not None:

@@ -24,6 +24,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Observation
 
+from datapipeline_omnichanneltobigquery_spark.operators.normalize import observed
+
 SCALE = 10**12  # fixed-point denominator
 DAMP_NUM, DAMP_DEN = 85, 100  # damping 0.85 as an integer ratio
 
@@ -653,7 +655,7 @@ def hits_fixedpoint(
         # the flooring division is a literal-divisor projection
         obs_a = Observation()
         a_raw = a_raw.observe(obs_a, F.max("raw").alias("mx")).localCheckpoint()
-        amx = obs_a.get["mx"]
+        amx = observed(obs_a)["mx"]
         a = a_raw.select(
             F.col("dst").alias("node"),
             F.expr(f"(raw * {HITS_SCALE}) div CAST({1 if amx is None else int(amx)} AS BIGINT)")
@@ -673,7 +675,7 @@ def hits_fixedpoint(
             h_raw = h_grp.agg(F.sum("a").cast("bigint").alias("raw"))
         obs_h = Observation()
         h_raw = h_raw.observe(obs_h, F.max("raw").alias("mx")).localCheckpoint()
-        hmx = obs_h.get["mx"]
+        hmx = observed(obs_h)["mx"]
         h = h_raw.select(
             F.col("src").alias("node"),
             F.expr(f"(raw * {HITS_SCALE}) div CAST({1 if hmx is None else int(hmx)} AS BIGINT)")

@@ -153,8 +153,8 @@ def observe_cast_nulls(df: DataFrame, cols: list[str] | None = None, name: str =
     on the job itself — at 100 TB the data-quality numbers ride the load
     job instead of paying a second full scan, which is what a follow-up
     ``SELECT COUNT(*) WHERE x IS NULL`` audit would cost).  Nulls created
-    by the cast policy's TRY-style coercions surface here; read
-    ``observation.get`` after the action completes."""
+    by the cast policy's TRY-style coercions surface here; read them with
+    :func:`observed` after the action completes."""
     from pyspark.sql import Observation
 
     cols = list(cols) if cols is not None else list(df.columns)
@@ -163,3 +163,23 @@ def observe_cast_nulls(df: DataFrame, cols: list[str] | None = None, name: str =
         F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"nulls_{c}") for c in cols
     ]
     return df.observe(obs, *aggs), obs
+
+
+def observed(obs) -> dict:
+    """The metrics of an ``Observation`` whose action has run.
+
+    ``Observation.get`` waits without a bound until the observed frame's
+    first action finishes, so reading one whose action never ran (or was
+    optimised away) blocks the driver forever.  This raises instead.
+
+    The metrics arrive through Spark's listener bus a moment after the
+    action returns, so an incomplete observation is checked again once the
+    bus is drained (a wait Spark bounds at 10 s)."""
+    from pyspark import SparkContext
+
+    jo = obs._jo
+    if jo is not None and not jo.future().isCompleted():
+        SparkContext._active_spark_context._jsc.sc().listenerBus().waitUntilEmpty()
+    if jo is None or not jo.future().isCompleted():
+        raise RuntimeError("observation read before its action ran")
+    return obs.get

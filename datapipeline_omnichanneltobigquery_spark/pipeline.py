@@ -5,7 +5,9 @@
 paginated source → name-driven cast policy → canonical sort → preview →
 either create/overwrite a table ('new', :272-278) or staging→MERGE→drop
 ('update', :296-301).  Every stage is the Spark-first operator from this
-package; the chain stays one lazy plan until the sink.
+package; the chain stays one lazy plan until the sink.  The pipeline
+persists the source it fetched, and nothing else: the sort's range sample
+and the write would otherwise call the paginated API twice per page.
 """
 
 from __future__ import annotations
@@ -53,27 +55,33 @@ def run_pipeline(
     ``source_df`` or a ``fetch_page``+``schema`` pair for the distributed
     paginated source.  ``action``: 'new' (truncate-create, :272-278) or
     'update' (staging upsert on ``key``, :296-301)."""
+    fetched = None
     if source_df is None:
         if fetch_page is None or schema is None:
             raise ValueError("need source_df, or fetch_page + schema")
-        source_df = paginated_to_df(spark, fetch_page, n_pages, schema)
+        # the first job (preview or the sort's sample) fills the cache;
+        # every later one reads it instead of the API
+        source_df = fetched = paginated_to_df(spark, fetch_page, n_pages, schema).persist()
+    try:
+        df = sort_by_created_at(cast_columns(source_df))
+        report = cast_report(source_df)
 
-    df = sort_by_created_at(cast_columns(source_df))
-    report = cast_report(source_df)
+        head: list = []
+        if show_preview:
+            # only the head: preview()'s count() would be one more source pass
+            head = df.limit(5).collect()
 
-    head: list = []
-    if show_preview:
-        # only the head: preview()'s count() would be one more source pass
-        head = df.limit(5).collect()
-
-    if action == "new":
-        n = overwrite_table(df, table)
-    elif action == "update":
-        if not spark.catalog.tableExists(table):
-            raise ValueError(f"update target {table!r} not in catalog")
-        n = upsert_into_table(spark, df, table, key=key, staging_table=staging_table)
-    else:
-        raise ValueError(f"unsupported action {action!r}")
+        if action == "new":
+            n = overwrite_table(df, table)
+        elif action == "update":
+            if not spark.catalog.tableExists(table):
+                raise ValueError(f"update target {table!r} not in catalog")
+            n = upsert_into_table(spark, df, table, key=key, staging_table=staging_table)
+        else:
+            raise ValueError(f"unsupported action {action!r}")
+    finally:
+        if fetched is not None:
+            fetched.unpersist()
 
     return PipelineResult(
         action=action,

@@ -9,7 +9,9 @@ Maps omnichannel_to_bq.py:125-201 onto the Spark catalog:
   merge-and-swap :func:`merge_into_table` the streaming upsert shares;
 * ``list_tables`` (:132-141) → ``spark.catalog.listTables``;
 * ``drop_table`` (not_found_ok, :193-201) → ``DROP TABLE IF EXISTS``;
-* post-load COUNT(*) verification (:159, :186) → :func:`row_count`.
+* post-load COUNT(*) verification (:159, :186) → a ``count(1)``
+  ``Observation`` on the write job itself, so the loaded and merged counts
+  cost no read-back scan; :func:`row_count` stays the table-level COUNT(*).
 
 For an actual BigQuery deployment the same DataFrames go through
 ``df.write.format('bigquery')`` (spark-bigquery-connector); that writer is
@@ -21,9 +23,21 @@ deployment concerns, not engine semantics.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
+from datapipeline_omnichanneltobigquery_spark.operators.normalize import observed
 from datapipeline_omnichanneltobigquery_spark.operators.upsert import upsert
+
+
+def _save_counted(df: DataFrame, name: str, partition_by: list[str] | None = None) -> int:
+    """Overwrite-save ``df`` as parquet table ``name`` and return its row
+    count, observed on the write job (no second pass over the table)."""
+    obs = Observation()
+    writer = df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").format("parquet")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.saveAsTable(name)
+    return observed(obs)["n"]
 
 
 def swap_table(spark: SparkSession, main_table: str, staged_table: str) -> None:
@@ -49,7 +63,8 @@ def swap_table(spark: SparkSession, main_table: str, staged_table: str) -> None:
 
 
 def overwrite_table(df: DataFrame, name: str, partition_by: list[str] | None = None) -> int:
-    """Create-or-truncate load (WRITE_TRUNCATE, :147-152) + count verify (:159).
+    """Create-or-truncate load (WRITE_TRUNCATE, :147-152); returns the
+    loaded row count (:159), observed on the write job.
 
     Parquet managed table: at cluster scale the write is parallel per
     partition; no driver materialization.  ``partition_by`` hive-partitions
@@ -57,11 +72,7 @@ def overwrite_table(df: DataFrame, name: str, partition_by: list[str] | None = N
     (PartitionFilters in the scan) — the first thing to reach for on a
     100 TB time-series table (partition by day, filter by day).
     """
-    writer = df.write.mode("overwrite").format("parquet")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.saveAsTable(name)
-    return row_count(df.sparkSession, name)
+    return _save_counted(df, name, partition_by)
 
 
 def merge_into_table(
@@ -70,9 +81,10 @@ def merge_into_table(
     main_table: str,
     key: str = "id",
     dedupe_by: str | None = None,
-) -> None:
+) -> int:
     """MERGE ``increment`` into ``main_table`` on ``key`` (:176-182) and
-    write-new-then-swap the result in under the main name.
+    write-new-then-swap the result in under the main name; returns the
+    merged row count, observed on the write job.
 
     The merge is the anti-join + union plan of
     :func:`datapipeline_omnichanneltobigquery_spark.operators.upsert.upsert`
@@ -88,8 +100,9 @@ def merge_into_table(
         broadcast_staging=True,
         dedupe_staging_by=dedupe_by,
     )
-    merged.write.mode("overwrite").format("parquet").saveAsTable(f"{main_table}__merged")
+    n = _save_counted(merged, f"{main_table}__merged")
     swap_table(spark, main_table, f"{main_table}__merged")
+    return n
 
 
 def upsert_into_table(
@@ -101,11 +114,11 @@ def upsert_into_table(
 ) -> int:
     """The full reference update path (:296-301): write staging,
     :func:`merge_into_table` on ``key``, drop staging; returns the merged
-    row count (:186)."""
+    row count (:186), observed on the merge's write job."""
     staging_df.write.mode("overwrite").format("parquet").saveAsTable(staging_table)
-    merge_into_table(spark, spark.table(staging_table), main_table, key=key)
+    n = merge_into_table(spark, spark.table(staging_table), main_table, key=key)
     drop_table(spark, staging_table)
-    return row_count(spark, main_table)
+    return n
 
 
 def list_tables(spark: SparkSession, db: str | None = None) -> list[str]:

@@ -4,10 +4,12 @@ reference contract: omnichannel_to_bq.py:63-123)."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from datapipeline_omnichanneltobigquery_spark.operators.normalize import (
     cast_columns,
     cast_report,
+    observed,
     preview,
     sort_by_created_at,
 )
@@ -87,9 +89,26 @@ def test_observe_cast_nulls_rides_the_action(spark):
         "amount string, created_at string",
     )
     cast = cast_columns(raw)  # 'amount' -> INT (reference name policy); 'x' -> NULL
-    observed, obs = observe_cast_nulls(cast)
-    observed.write.format("noop").mode("overwrite").save()
-    got = obs.get
+    telemetered, obs = observe_cast_nulls(cast)
+    telemetered.write.format("noop").mode("overwrite").save()
+    got = observed(obs)
     assert got["rows"] == 3
     assert got["nulls_amount"] == 1  # the unparseable 'x'
     assert got["nulls_created_at"] == 1
+
+
+def test_observed_raises_before_the_action(spark):
+    """Reading an observation whose frame never ran raises at once instead
+    of blocking the driver the way ``Observation.get`` does."""
+    import time
+
+    from pyspark.sql import Observation
+
+    unattached = Observation()
+    never_run = Observation()
+    spark.range(3).observe(never_run, F.count(F.lit(1)).alias("n"))
+    for obs in (unattached, never_run):
+        t0 = time.perf_counter()
+        with pytest.raises(RuntimeError, match="before its action ran"):
+            observed(obs)
+        assert time.perf_counter() - t0 < 5

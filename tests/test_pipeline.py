@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 from datapipeline_omnichanneltobigquery_spark.pipeline import run_pipeline
@@ -90,9 +92,10 @@ def test_pipeline_update_db_qualified_table(spark):
 
 
 def test_pipeline_preview_costs_one_source_pass(spark, tmp_path):
-    """show_preview takes the head in one pass over the pages (a top-k
-    over the sorted source) and no count pass; the head is the first 5
-    rows in created_at order, nulls last."""
+    """Each page is fetched exactly once per run, with or without preview:
+    the fetched source is cached by its first job (the preview's top-k or
+    the sort's range sample), and the head is the first 5 rows in
+    created_at order, nulls last."""
     log = str(tmp_path / "page_calls.log")
     stamps = {
         1: ["2024-01-05 00:00:00", None, "2024-01-02 00:00:00"],
@@ -117,8 +120,9 @@ def test_pipeline_preview_costs_one_source_pass(spark, tmp_path):
     try:
         run_pipeline(spark, table="t_no_preview", **common)
         plain = _calls()
+        assert plain == n_pages
         res = run_pipeline(spark, table="t_preview", show_preview=True, **common)
-        assert _calls() - plain == plain + n_pages
+        assert _calls() - plain == n_pages
         ordered = sorted(
             (ts, page * 10 + i)
             for page, col in stamps.items()
@@ -129,3 +133,66 @@ def test_pipeline_preview_costs_one_source_pass(spark, tmp_path):
     finally:
         drop_table(spark, "t_no_preview")
         drop_table(spark, "t_preview")
+
+
+def _jobs(spark, run) -> int:
+    """Spark jobs that ``run()`` starts, counted under a job group."""
+    sc = spark.sparkContext
+    group = f"test_pipeline_jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store has every job
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pipeline_job_counts(spark):
+    """Row counts ride the write jobs, so neither path reads its table back
+    for a count, and the fetched pages are cached, so the sort's sample and
+    the write share one fetch: 4 jobs for a 'new' run over pages, 5 for an
+    'update' from a frame."""
+
+    def _fetch(page: int) -> list[dict]:
+        return [
+            {"id": str(page * 10 + i), "created_at": f"2024-01-0{page} 00:0{i}:00", "subject": "s"}
+            for i in range(3)
+        ]
+
+    upd = spark.createDataFrame(
+        [("11", "2024-02-01 00:00:00", "CHANGED"), ("99", "2024-02-02 00:00:00", "new")], SCHEMA
+    )
+    try:
+        new = _jobs(
+            spark,
+            lambda: run_pipeline(
+                spark, fetch_page=_fetch, n_pages=3, schema=SCHEMA, action="new", table="t_jobs"
+            ),
+        )
+        update = _jobs(
+            spark, lambda: run_pipeline(spark, source_df=upd, action="update", table="t_jobs")
+        )
+        assert (new, update) == (4, 5)
+        assert spark.table("t_jobs").count() == 10
+    finally:
+        drop_table(spark, "t_jobs")
+
+
+def test_pipeline_empty_fetch_loads_nothing(spark):
+    """A source whose every page is empty loads an empty table, and an
+    empty update leaves it empty: the observed count still arrives with
+    the write job when there are no rows to write."""
+
+    def _fetch(page: int) -> list[dict]:
+        return []
+
+    common = dict(fetch_page=_fetch, n_pages=3, schema=SCHEMA, table="t_empty")
+    try:
+        assert run_pipeline(spark, action="new", **common).rows_loaded == 0
+        assert spark.table("t_empty").count() == 0
+        assert run_pipeline(spark, action="update", **common).rows_loaded == 0
+        assert spark.table("t_empty").count() == 0
+    finally:
+        drop_table(spark, "t_empty")

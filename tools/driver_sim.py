@@ -34,6 +34,10 @@ def main() -> int:
     for a in sys.argv[1:]:
         if a.startswith("--only="):
             only = set(a.split("=", 1)[1].split(","))
+    # no console progress bar: its carriage-return [Stage ...] updates land
+    # on the result rows' lines, and filtering them out drops the rows
+    submit = os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
+    os.environ["PYSPARK_SUBMIT_ARGS"] = f"--conf spark.ui.showConsoleProgress=false {submit}"
     if "--vanilla" in sys.argv:
         # a bare session like the driver's: no engine configs, ambient tz
         from pyspark.sql import SparkSession
