@@ -105,5 +105,8 @@ def paginated_to_df(
 
     # One page per task: page fetches are network-bound, so fine-grained
     # tasks keep executors busy and let stragglers be retried independently.
+    # Each task has a fixed Python-worker cost: 8 one-page tasks into a noop
+    # sink on local[4] (4 vCPU) took 0.81-0.97 s under Spark's own worker
+    # daemon and 0.30-0.36 s under the engine's (worker_daemon.py).
     pages = spark.range(0, n_pages, numPartitions=max(1, n_pages))
     return pages.mapInPandas(fetch_partition, schema=schema)
