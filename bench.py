@@ -70,6 +70,10 @@ def warm_up(spark: SparkSession) -> None:
     """Warm the JVM/codegen once on the smallest table so the first timed
     query doesn't pay session startup."""
     spark.read.parquet(f"{SF_DIR}/region.parquet").count()
+    # one Python-worker task, so the worker daemon's start lands here and
+    # not on the first timed query that runs Python code
+    one_row = spark.range(1).mapInArrow(lambda batches: batches, "id long")
+    one_row.write.format("noop").mode("overwrite").save()
     calibrate(spark)
     # ^ second warmup = the calibration probe's own plan shape: the probe
     # measures HOST contention, and an un-warmed first probe reads ~0.45 s

@@ -21,6 +21,8 @@ import sys
 
 import pyspark.sql.functions as F
 
+from datapipeline_omnichanneltobigquery_spark.sources.tables import TABLES, read_table
+
 
 def _spark(args):
     from datapipeline_omnichanneltobigquery_spark.session import get_spark
@@ -58,7 +60,7 @@ def main(argv: list[str] | None = None) -> int:
     pr.add_argument("--bench-rem", type=int, default=7)
 
     pf = sub.add_parser("profile", help="single-pass column profile of a table")
-    pf.add_argument("table")
+    pf.add_argument("table", choices=TABLES)
     pf.add_argument("--sf-dir", required=True)
     pf.add_argument("--approx", action="store_true")
     pf.add_argument("--out", default=None)
@@ -97,7 +99,6 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "prepare":
         from datapipeline_omnichanneltobigquery_spark.operators.corpus_prep import prepare_corpus
-        from datapipeline_omnichanneltobigquery_spark.sources.tables import read_table
 
         docs = read_table(spark, args.sf_dir, "documents")
         bench = docs.filter(F.col("doc_id") % args.bench_mod == args.bench_rem)
@@ -108,7 +109,6 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "profile":
         from datapipeline_omnichanneltobigquery_spark.operators.profile import profile_columns
-        from datapipeline_omnichanneltobigquery_spark.sources.tables import read_table
 
         df = read_table(spark, args.sf_dir, args.table)
         _emit(profile_columns(df, approx=args.approx), args.out, args.show)

@@ -64,11 +64,3 @@ def minhash_expr(hash_col: Column, num_hashes: int, seed: int = 42) -> list[Colu
         expr = (h * F.lit(a) + F.lit(b)) % F.lit(MERSENNE_P)
         cols.append(expr.alias(f"mh_{i}"))
     return cols
-
-
-def minhash_sql_exprs(hash_expr: str, num_hashes: int, seed: int = 42) -> list[str]:
-    """DuckDB oracle spelling of :func:`minhash_expr` (same 64-bit math)."""
-    exprs = []
-    for i, (a, b) in enumerate(_minhash_params(num_hashes, seed)):
-        exprs.append(f"((({hash_expr}) % {MERSENNE_P}) * {a} + {b}) % {MERSENNE_P} AS mh_{i}")
-    return exprs

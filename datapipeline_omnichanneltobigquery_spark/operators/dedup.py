@@ -426,17 +426,6 @@ def _signatures_from_shingles(sh: DataFrame, num_hashes: int, seed: int) -> Data
     return sh.groupBy("id").agg(*aggs)
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, num_hashes: int = 16, seed: int = 42
-) -> DataFrame:
-    """(id, mh_0..mh_{K-1}): MinHash signature per document.
-
-    One groupBy(id) over the exploded shingles computes all K mins in a
-    single partial+final aggregate — the signature never needs a second pass.
-    """
-    return _signatures_from_shingles(shingles(df, id_col, text_col, n), num_hashes, seed)
-
-
 def _band_key(num_hashes: int, rows_per_band: int, band: int) -> Column:
     cols = [F.col(f"mh_{band * rows_per_band + r}") for r in range(rows_per_band)]
     return F.concat_ws(",", *[c.cast("string") for c in cols])

@@ -1448,12 +1448,6 @@ def pq_topk_join_sql(
 # ---------------------------------------------------------------------------
 
 
-def _lit_vec(values) -> Column:
-    """array<double> literal from a collected vector (exact: binary64
-    round-trips py4j unchanged)."""
-    return F.array(*[F.lit(float(v)) for v in values])
-
-
 def _pq_index_batches_fn(cent_ids, cent_mat, js, cb_mats, sd, id_name):
     """mapInArrow kernel assigning + PQ-encoding a vector batch against
     frozen centroid/codebook matrices — the :func:`_unit_rows` discipline

@@ -82,13 +82,6 @@ def file_scan_counts(df: DataFrame) -> dict[str, int]:
     return out
 
 
-def max_file_scans(df: DataFrame) -> int:
-    """The largest per-source scan count in the plan (0 = scans only
-    checkpointed/in-memory state)."""
-    counts = file_scan_counts(df)
-    return max(counts.values()) if counts else 0
-
-
 def reused_exchange_count(df: DataFrame) -> int:
     """ReusedExchange nodes — Catalyst sharing an identical shuffle
     subtree instead of recomputing it."""

@@ -6,25 +6,46 @@ The reference's only source is a paginated REST API
 are the engine extension that makes everything else testable and is the
 natural 100 TB substrate: columnar parquet scans get predicate pushdown,
 column pruning, and partition pruning from Catalyst for free.
+
+The ten testdata tables are read under schemas declared in ``SCHEMAS``
+rather than inferred.  Spark infers a parquet schema with a one-task job,
+so an undeclared read costs one Spark job per call, and the query registry
+reads tables from hundreds of call sites.  Each read first checks the
+declared columns against the file's parquet footer on the driver (pyarrow,
+well under a millisecond, no cache), and fails with the column's name on a
+mismatch instead of letting Spark read a missing column as NULL.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_type
+from pyspark.sql.types import LongType, StructField, StructType, TimestampNTZType, TimestampType
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+# The testdata tables and their declared schemas: the types Spark's
+# own inference gives these files (the same at every scale factor).
+SCHEMAS = {
+    "region": "r_regionkey int, r_name string",
+    "nation": "n_nationkey int, n_name string, n_regionkey int",
+    "customer": "c_custkey bigint, c_name string, c_nationkey int, c_acctbal double,"
+    " c_mktsegment string",
+    "supplier": "s_suppkey bigint, s_name string, s_nationkey int, s_acctbal double",
+    "part": "p_partkey bigint, p_name string, p_brand string, p_type string, p_size int,"
+    " p_retailprice double",
+    "orders": "o_orderkey bigint, o_custkey bigint, o_orderstatus string, o_totalprice double,"
+    " o_orderdate timestamp_ntz, o_orderpriority string",
+    "lineitem": "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, l_linenumber int,"
+    " l_quantity double, l_extendedprice double, l_discount double, l_tax double,"
+    " l_returnflag string, l_linestatus string, l_shipdate timestamp_ntz",
+    "events": "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string,"
+    " value double, props string",
+    "documents": "doc_id bigint, text string, lang string, source string, n_chars bigint",
+    "embeddings": "vec_id bigint, embedding array<float>, label int",
+}
+TABLES = tuple(SCHEMAS)
 
 # Event-time columns whose physical parquet type has varied across driver
 # testdata generations: TIMESTAMP(NANOS) (surfaced as epoch-nanos LongType
@@ -36,26 +57,65 @@ TABLES = (
 _EVENT_TS_COLUMNS = {"events": ("ts",)}
 
 
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one testdata table as a DataFrame.
+def _spark_kind(at: pa.DataType) -> str:
+    """The Spark type that inference gives a column pyarrow reads as ``at``."""
+    try:
+        return from_arrow_type(at).simpleString()
+    except TypeError:  # no Spark reading
+        return str(at)
 
-    Plain ``spark.read.parquet`` so filters/projections placed on the result
-    push down into the scan (check ``PushedFilters`` in ``.explain``).
+
+def _checked_schema(path: str, declared: StructType) -> StructType:
+    """``declared`` as it must be read from ``path``, checked against the
+    file's footer on the driver (no Spark job).  A declared column that is
+    missing or of another kind raises ``ValueError``, where Spark would
+    silently read a missing column as NULL; undeclared columns are not read."""
+    footer = pq.read_schema(path)
+    fields = []
+    for field in declared:
+        kind = field.dataType.simpleString()
+        if field.name not in footer.names:
+            raise ValueError(f"{path}: declared column {field.name!r} ({kind}) is missing")
+        at = footer.field(field.name).type
+        if kind in ("timestamp", "timestamp_ntz") and pa.types.is_timestamp(at):
+            # the file's unit and UTC flag decide, as under inference: NANOS
+            # read as epoch-nanos (nanosAsLong), MICROS/MILLIS are NTZ
+            # unless flagged as adjusted to UTC
+            ts = LongType() if at.unit == "ns" else TimestampType() if at.tz else TimestampNTZType()
+            field = StructField(field.name, ts)
+        elif (found := _spark_kind(at)) != kind:
+            raise ValueError(
+                f"{path}: column {field.name!r} is declared {kind} but the file holds {found}"
+            )
+        fields.append(field)
+    return StructType(fields)
+
+
+def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one testdata table as a DataFrame under its declared schema.
+
+    The schema comes from ``SCHEMAS`` and is checked against the file's
+    parquet footer on the driver, so the read runs no Spark job, where an
+    undeclared read runs a schema-inference job on every call.  Plain
+    parquet scan, so filters/projections placed on the result push down
+    into it (check ``PushedFilters`` in ``.explain``).
     """
     # Defensive session confs for sessions not built by get_spark() (e.g. the
     # driver's own).  Both are runtime-settable:
     # - UTC session tz: date_format/window on ltz timestamps render in the
     #   session zone; a non-UTC ambient zone would silently shift every
     #   formatted timestamp relative to the (naive) DuckDB oracle;
-    # - nanosAsLong: Spark 4 otherwise rejects TIMESTAMP(NANOS) parquet.
+    # - nanosAsLong, when a declared timestamp column is NANOS in the file:
+    #   Spark 4 otherwise rejects TIMESTAMP(NANOS) parquet.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if name in _EVENT_TS_COLUMNS:
+    path = f"{sf_dir}/{name}.parquet"
+    declared = StructType.fromDDL(SCHEMAS[name])
+    schema = _checked_schema(path, declared)
+    if any(r.dataType != d.dataType and r.dataType == LongType() for r, d in zip(schema, declared)):
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = spark.read.schema(schema).parquet(path)
     for col in _EVENT_TS_COLUMNS.get(name, ()):
-        if col not in df.columns:
-            continue
-        dtype = dict(df.dtypes)[col]
+        dtype = schema[col].dataType.simpleString()
         if dtype == "bigint":
             # TIMESTAMP(NANOS) read as epoch-nanos.  Integer arithmetic:
             # epoch-nanos exceed double's 2^53 exact range, so a float
@@ -75,17 +135,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # require the LTZ type.
             df = df.withColumn(col, F.col(col).cast("timestamp"))
     return df
-
-
-def read_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Read every testdata table; keys match DuckDB oracle view names."""
-    return {name: read_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all tables as temp views so ``spark.sql`` can address them."""
-    for name, df in read_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
 
 
 def read_csv(spark: SparkSession, path: str, schema=None, header: bool = True) -> DataFrame:

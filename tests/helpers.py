@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import datetime as dt
 import math
+import uuid
 from decimal import Decimal
 
 
@@ -68,3 +69,17 @@ def compare_spark_duckdb(sdf, duck, sql: str) -> None:
     dc, dr = canon_rows(dcols, drows)
     mismatches = [(a, b) for a, b in zip(sr, dr) if a != b]
     assert not mismatches, f"value mismatch ({len(mismatches)} rows), first: {mismatches[0]}"
+
+
+def count_jobs(spark, run) -> int:
+    """Spark jobs that ``run()`` starts, counted under a job group."""
+    sc = spark.sparkContext
+    group = f"count_jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store has every job
+    return len(sc.statusTracker().getJobIdsForGroup(group))

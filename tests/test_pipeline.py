@@ -3,12 +3,12 @@
 
 from __future__ import annotations
 
-import uuid
-
 import pytest
 
 from datapipeline_omnichanneltobigquery_spark.pipeline import run_pipeline
 from datapipeline_omnichanneltobigquery_spark.sinks.catalog import drop_table, list_tables
+
+from tests.helpers import count_jobs
 
 
 SCHEMA = "id string, created_at string, subject string"
@@ -135,20 +135,6 @@ def test_pipeline_preview_costs_one_source_pass(spark, tmp_path):
         drop_table(spark, "t_preview")
 
 
-def _jobs(spark, run) -> int:
-    """Spark jobs that ``run()`` starts, counted under a job group."""
-    sc = spark.sparkContext
-    group = f"test_pipeline_jobs_{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        run()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store has every job
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_pipeline_job_counts(spark):
     """Row counts ride the write jobs, so neither path reads its table back
     for a count, and the fetched pages are cached, so the sort's sample and
@@ -165,13 +151,13 @@ def test_pipeline_job_counts(spark):
         [("11", "2024-02-01 00:00:00", "CHANGED"), ("99", "2024-02-02 00:00:00", "new")], SCHEMA
     )
     try:
-        new = _jobs(
+        new = count_jobs(
             spark,
             lambda: run_pipeline(
                 spark, fetch_page=_fetch, n_pages=3, schema=SCHEMA, action="new", table="t_jobs"
             ),
         )
-        update = _jobs(
+        update = count_jobs(
             spark, lambda: run_pipeline(spark, source_df=upd, action="update", table="t_jobs")
         )
         assert (new, update) == (4, 5)

@@ -11,6 +11,7 @@ from datapipeline_omnichanneltobigquery_spark.plans.queries import EXTRA_QUERIES
 from datapipeline_omnichanneltobigquery_spark.sources.tables import read_table
 
 from tests.conftest import SF_DIR
+from tests.helpers import count_jobs
 
 
 def test_filter_pushdown_reaches_scan(spark):
@@ -369,6 +370,18 @@ def test_no_redundant_source_scans(spark):
         if worst > cap:
             offenders[name] = counts
     assert not offenders, offenders
+
+
+# Gated queries whose build (the builder call, before any action) runs no
+# Spark job: the per-query jobs ceiling of the build phase.
+JOBLESS_BUILDS = ("er_fs_weights", "event_time_filter", "upsert_merge")
+
+
+def test_jobless_builds(spark):
+    """Tables are read under declared schemas, so a builder that runs no
+    eager action of its own runs no job at all until its sink does."""
+    jobs = {q: count_jobs(spark, lambda q=q: QUERIES[q](spark, SF_DIR)) for q in JOBLESS_BUILDS}
+    assert jobs == dict.fromkeys(JOBLESS_BUILDS, 0)
 
 
 def test_every_gated_aggregate_combines_map_side(spark):

@@ -4,11 +4,21 @@ omnichannel_to_bq.py:145-152 — ours must not)."""
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
+import pytest
 
-from datapipeline_omnichanneltobigquery_spark.sources.tables import read_csv, read_json, read_table
+from datapipeline_omnichanneltobigquery_spark.sources.tables import (
+    TABLES,
+    read_csv,
+    read_json,
+    read_table,
+)
+from perfbench.starschema import write_tables
 
 from tests.conftest import SF_DIR
+from tests.helpers import count_jobs
 
 
 def test_csv_roundtrip_with_schema(spark, tmp_path):
@@ -81,6 +91,72 @@ def test_event_ts_normalized_regardless_of_physical_type(spark):
     assert dict(ev.dtypes)["ts"] == "timestamp", ev.dtypes
     # and it must actually be usable by the micros accessor
     assert ev.select(F.unix_micros("ts")).first()[0] is not None
+
+
+def test_read_table_runs_no_spark_job(spark):
+    """Every table's schema is declared, so a read runs no schema-inference
+    job: only the actions on the result run jobs."""
+    jobs = {t: count_jobs(spark, lambda t=t: read_table(spark, SF_DIR, t)) for t in TABLES}
+    assert jobs == dict.fromkeys(TABLES, 0)
+
+
+def _inferred(spark, sf_dir, name):
+    """The schema an undeclared read gives, with read_table's ts cast."""
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    if name == "events":
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df.schema
+
+
+def test_declared_schemas_match_inference(spark, tmp_path):
+    """The declared schemas are exactly what inference gave, on the
+    reference testdata and on the benchmark's seeded star-schema copy."""
+    write_tables(1, 0.01, str(tmp_path))
+    for sf_dir in (SF_DIR, str(tmp_path)):
+        for t in TABLES:
+            assert read_table(spark, sf_dir, t).schema == _inferred(spark, sf_dir, t), (sf_dir, t)
+
+
+def _events_copy(out_dir, change) -> str:
+    """``events.parquet`` rewritten by ``change(table)`` into ``out_dir``."""
+    out_dir.mkdir(exist_ok=True)
+    table = change(pq.read_table(f"{SF_DIR}/events.parquet"))
+    pq.write_table(table, str(out_dir / "events.parquet"))
+    return str(out_dir)
+
+
+def _set(table: pa.Table, name: str, array) -> pa.Table:
+    return table.set_column(table.schema.get_field_index(name), name, array)
+
+
+def test_read_table_footer_mismatch_names_the_column(spark, tmp_path):
+    """A declared column the file lacks, or holds as another type, fails
+    before Spark can read it as NULL."""
+    renamed = _events_copy(
+        tmp_path / "renamed",
+        lambda t: t.rename_columns(["props_v2" if c == "props" else c for c in t.column_names]),
+    )
+    with pytest.raises(ValueError, match="'props'"):
+        read_table(spark, renamed, "events")
+    retyped = _events_copy(
+        tmp_path / "retyped", lambda t: _set(t, "value", t["value"].cast(pa.string()))
+    )
+    with pytest.raises(ValueError, match="'value' is declared double but the file holds string"):
+        read_table(spark, retyped, "events")
+
+
+def test_read_table_nanos_event_ts(spark, tmp_path):
+    """An events file whose ts is TIMESTAMP(NANOS) reads as the same
+    session TIMESTAMP, microsecond for microsecond."""
+    nanos = _events_copy(tmp_path, lambda t: _set(t, "ts", t["ts"].cast(pa.timestamp("ns"))))
+    assert pq.read_schema(f"{nanos}/events.parquet").field("ts").type == pa.timestamp("ns")
+
+    def micros(sf_dir):
+        df = read_table(spark, sf_dir, "events")
+        assert dict(df.dtypes)["ts"] == "timestamp"
+        return df.select("event_id", F.unix_micros("ts")).orderBy("event_id").collect()
+
+    assert micros(nanos) == micros(SF_DIR)
 
 
 def test_read_json_tolerant_quarantines_bad_lines(spark, tmp_path):
