@@ -201,7 +201,6 @@ def markov_attribution(
     conv_state: int,
     null_state: int,
     iterations: int = 12,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """First-order Markov-chain attribution by removal effects (Anderl et
     al., IJRM 2016) — the third face of the attribution family: positional
@@ -241,8 +240,7 @@ def markov_attribution(
     overhead: the corpus never participates past the first aggregate.
     The rounded double outputs are still computed by Spark expressions
     (HALF_UP ``round``) over the local result relation, so they are
-    bit-identical to the old plan's.  ``checkpoint_every`` is retained
-    for API compatibility; the driver fixed point no longer needs it.
+    bit-identical to the old plan's.
 
     Channel state ids must be distinct and disjoint from the reserved
     ids (0 = the base variant marker, start/conv/null) — a channel

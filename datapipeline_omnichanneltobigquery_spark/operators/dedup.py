@@ -808,66 +808,6 @@ def simhash_near_dup_pairs_sql(table: str, id_col: str, text_col: str, max_hammi
 # ---------------------------------------------------------------------------
 
 
-def connected_components(
-    pairs: DataFrame, max_iterations: int = 50, stats: dict | None = None
-) -> DataFrame:
-    """Connected components over an undirected edge list ``(id_a, id_b)``:
-    returns ``(id, cluster_id)`` for every node that appears in an edge,
-    where ``cluster_id`` is the minimum node id in the component — the
-    deterministic cluster representative.
-
-    This is the step that turns near-dup PAIRS into dedup CLUSTERS (a dup of
-    a dup is a dup): transitive closure, then keep one doc per component.
-
-    Algorithm: min-label propagation to fixpoint.  Each iteration sends every
-    node's current label to its neighbors and takes the min — one equi-join
-    plus one min-aggregate, i.e. two key shuffles over the edge list, fully
-    distributed.  Converges in O(graph diameter) iterations; near-dup graphs
-    are dense little cliques (diameter 2-3 hops), which is why this is the
-    default for the dedup pipeline.  For adversarial long-diameter graphs use
-    :func:`connected_components_star` (O(log n) rounds).
-
-    Convergence is detected EXACTLY: the per-round aggregate carries each
-    node's previous label alongside the new min, and the round's checkpoint
-    is probed for any ``new < previous`` row (labels are monotone
-    non-increasing, so none ⇔ fixpoint).  This replaces a sum(lbl)
-    comparison, which Spark's non-ANSI wrapping long sum could in principle
-    alias across two different label states.  The probe is a take-1 scan of
-    the freshly checkpointed labels — same per-round job count (checkpoint +
-    probe), no extra shuffle.
-    """
-    sym = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
-    labels = sym.select(F.col("src").alias("id")).distinct().withColumn("lbl", F.col("id"))
-    for it in range(max_iterations):
-        prop = sym.join(labels.withColumnRenamed("id", "src"), "src").select(
-            F.col("dst").alias("id"), "lbl"
-        )
-        merged = (
-            labels.withColumn("__old", F.lit(1))
-            .unionByName(prop.withColumn("__old", F.lit(0)))
-            .groupBy("id")
-            .agg(
-                F.min("lbl").alias("lbl"),
-                F.min(F.when(F.col("__old") == 1, F.col("lbl"))).alias("__prev"),
-            )
-            .localCheckpoint()
-        )
-        labels = merged.select("id", "lbl")
-        if merged.filter(F.col("lbl") < F.col("__prev")).isEmpty():
-            if stats is not None:
-                stats["rounds"] = it + 1
-            break
-    else:
-        raise RuntimeError(f"connected_components did not converge in {max_iterations} iterations")
-    return labels.select("id", F.col("lbl").alias("cluster_id"))
-
-
 def _star_edges(pairs: DataFrame) -> DataFrame:
     """Normalize an edge list to directed big→small form, self-loops dropped."""
     return (
@@ -911,12 +851,15 @@ def _small_star(edges: DataFrame) -> DataFrame:
 def connected_components_star(
     pairs: DataFrame, max_iterations: int = 50, stats: dict | None = None
 ) -> DataFrame:
-    """Connected components by alternating large-star/small-star rounds
-    (Kiveris et al., SoCC'14) — same contract as
-    :func:`connected_components` (``(id, cluster_id)``, cluster_id = min node
-    id of the component), but O(log n) rounds on ANY graph, including
-    adversarial long chains where plain min-label propagation needs
-    O(diameter) rounds.  Each round is the same join+min-aggregate building
+    """Connected components over an undirected edge list ``(id_a, id_b)``:
+    returns ``(id, cluster_id)`` for every node that appears in an edge,
+    where ``cluster_id`` is the minimum node id in the component — the
+    deterministic cluster representative.  This is the step that turns
+    near-dup PAIRS into dedup CLUSTERS (a dup of a dup is a dup).
+
+    Alternating large-star/small-star rounds (Kiveris et al., SoCC'14):
+    O(log n) rounds on ANY graph, including adversarial long chains where
+    min-label propagation needs O(diameter) rounds.  Each round is the same join+min-aggregate building
     blocks, fully distributed; the edge set is ``localCheckpoint``-ed once
     per round so the plan never grows.
 
@@ -986,7 +929,7 @@ def connected_components_star(
 
 
 def connected_components_sql(pairs_sql: str) -> str:
-    """DuckDB twin of :func:`connected_components`: min reachable node via a
+    """DuckDB twin of :func:`connected_components_star`: min reachable node via a
     recursive CTE (UNION-dedup bounds the walk; min over the reachability
     set is the component representative)."""
     return f"""

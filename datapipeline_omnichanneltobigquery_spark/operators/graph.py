@@ -87,7 +87,7 @@ def pagerank_fixedpoint(
     dividing by n = 0.  The evolving ``ranks`` state is localCheckpointed
     every ``checkpoint_every`` rounds so plan depth (and Catalyst analysis
     cost) stays bounded at high iteration counts — the same discipline as
-    ``connected_components``."""
+    ``connected_components_star``."""
     e = edges.select("src", "dst").distinct().localCheckpoint()
     nodes = (
         e.select(F.col("src").alias("node"))

@@ -133,13 +133,6 @@ def lang_exprs(text_col: str) -> list[Column]:
     return [pick.alias("lang_pred"), best.cast("bigint").alias("lang_hits")]
 
 
-def lang_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """N-gram/function-word language ID heuristic: hits per profile, argmax
-    with deterministic profile-order tie-break.  Emits the winning language
-    and its hit count."""
-    return df.select(F.col(id_col), *lang_exprs(text_col))
-
-
 def lang_id_sql(table: str, id_col: str, text_col: str) -> str:
     toks = f"regexp_split_to_array(trim(lower({text_col})), '\\s+')"
     hits = {
@@ -160,12 +153,6 @@ def token_count_exprs(text_col: str) -> list[Column]:
         F.size(_ws_tokens(text)).cast("bigint").alias("ws_tokens"),
         F.size(F.regexp_extract_all(text, F.lit(BPE_TOKEN_RE), 0)).cast("bigint").alias("bpe_tokens"),
     ]
-
-
-def token_counts(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Whitespace tokens and BPE-ish regex tokens per document — the
-    budget/estimation primitive for training-data pipelines."""
-    return df.select(F.col(id_col), *token_count_exprs(text_col))
 
 
 def token_counts_sql(table: str, id_col: str, text_col: str) -> str:

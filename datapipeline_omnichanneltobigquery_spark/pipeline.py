@@ -2,12 +2,16 @@
 
 ``run_pipeline`` reproduces ``Caresoft2BigQueryApp.on_submit``
 (omnichannel_to_bq.py:233-310) minus the GUI: fetch a time window from a
-paginated source → name-driven cast policy → canonical sort → preview →
-either create/overwrite a table ('new', :272-278) or staging→MERGE→drop
-('update', :296-301).  Every stage is the Spark-first operator from this
-package; the chain stays one lazy plan until the sink.  The pipeline
-persists the source it fetched, and nothing else: the sort's range sample
-and the write would otherwise call the paginated API twice per page.
+paginated source → name-driven cast policy → preview → either a
+``created_at``-sorted create/overwrite of a table ('new', :272-278) or a
+MERGE of the increment into it on a key ('update', :296-301).  The update
+merges the cast increment straight into main through
+:func:`~datapipeline_omnichanneltobigquery_spark.sinks.catalog.upsert_into_table`:
+no staging table, and no sort, whose order the merged write would not
+keep.  Every stage is the Spark-first operator from this package; the
+chain stays one lazy plan until the sink.  The pipeline persists the source
+it fetched, and nothing else: the sort's range sample, a preview and the
+write would otherwise call the paginated API once each per page.
 """
 
 from __future__ import annotations
@@ -47,36 +51,37 @@ def run_pipeline(
     schema: StructType | str | None = None,
     action: str = "new",
     table: str = "main",
-    staging_table: str = "__staging",
     key: str = "id",
     show_preview: bool = False,
 ) -> PipelineResult:
     """Run the full reference flow.  Provide either an already-built
     ``source_df`` or a ``fetch_page``+``schema`` pair for the distributed
-    paginated source.  ``action``: 'new' (truncate-create, :272-278) or
-    'update' (staging upsert on ``key``, :296-301)."""
+    paginated source.  ``action``: 'new' (truncate-create, sorted by
+    ``created_at``, :272-278) or 'update' (merge on ``key``, :296-301).
+    The preview is the first 5 rows in ``created_at`` order, nulls last."""
     fetched = None
     if source_df is None:
         if fetch_page is None or schema is None:
             raise ValueError("need source_df, or fetch_page + schema")
-        # the first job (preview or the sort's sample) fills the cache;
-        # every later one reads it instead of the API
+        # the first job (preview, the sort's sample or the merge's
+        # broadcast) fills the cache; every later one reads it instead of
+        # the API
         source_df = fetched = paginated_to_df(spark, fetch_page, n_pages, schema).persist()
     try:
-        df = sort_by_created_at(cast_columns(source_df))
+        df = cast_columns(source_df)
         report = cast_report(source_df)
 
         head: list = []
         if show_preview:
             # only the head: preview()'s count() would be one more source pass
-            head = df.limit(5).collect()
+            head = sort_by_created_at(df).limit(5).collect()
 
         if action == "new":
-            n = overwrite_table(df, table)
+            n = overwrite_table(sort_by_created_at(df), table)
         elif action == "update":
             if not spark.catalog.tableExists(table):
                 raise ValueError(f"update target {table!r} not in catalog")
-            n = upsert_into_table(spark, df, table, key=key, staging_table=staging_table)
+            n = upsert_into_table(spark, df, table, key=key)
         else:
             raise ValueError(f"unsupported action {action!r}")
     finally:

@@ -234,11 +234,10 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned in tests/test_llm_ops.py.  dim=None on purpose: compiling
     unrolled 64-term chains costs more than folding this probe's few
     thousand dots (pass dim= where the compile amortizes)."""
-    from datapipeline_omnichanneltobigquery_spark.plans.persistence import SCRATCH
+    from datapipeline_omnichanneltobigquery_spark.plans.persistence import scratch_path
 
     emb = read_table(spark, sf_dir, "embeddings")
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    path = f"{SCRATCH}/ivf_index_{sf_tag}"
+    path = scratch_path(spark, sf_dir, "ivf_index")
     sim.build_ivf_index(emb, path, n_centroids=16)
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]
     return sim.ivf_topk_from_index(
@@ -287,11 +286,10 @@ def similarity_ann_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings scan as a DYNAMIC partition-pruning filter, so only the union
     of probed cluster directories is read.  Fully deterministic index →
     full hash oracle."""
-    from datapipeline_omnichanneltobigquery_spark.plans.persistence import SCRATCH
+    from datapipeline_omnichanneltobigquery_spark.plans.persistence import scratch_path
 
     emb = read_table(spark, sf_dir, "embeddings")
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    path = f"{SCRATCH}/ivf_index_{sf_tag}"
+    path = scratch_path(spark, sf_dir, "ivf_index")
     sim.build_ivf_index(emb, path, n_centroids=16)
     return sim.ivf_topk_join_from_index(
         spark, path, emb.filter(F.col("vec_id") < 4), k=5, n_probe=4
@@ -317,12 +315,11 @@ def similarity_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     index the gated entry builds; the recall math is id-pair semi-join +
     two tiny aggregates.  Fully deterministic end to end, so the hash gate
     checks the recall NUMBERS, not just the plumbing."""
-    from datapipeline_omnichanneltobigquery_spark.plans.persistence import SCRATCH
+    from datapipeline_omnichanneltobigquery_spark.plans.persistence import scratch_path
 
     emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 16)
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    path = f"{SCRATCH}/ivf_index_{sf_tag}"
+    path = scratch_path(spark, sf_dir, "ivf_index")
     sim.build_ivf_index(emb, path, n_centroids=16)
     exact = sim.cosine_topk_join(queries, emb, k=5)
     approx = sim.ivf_topk_join_from_index(spark, path, queries, k=5, n_probe=4)
@@ -344,12 +341,11 @@ def similarity_ann_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     frozen centroids, so the oracle is the FULL-BUILD search over the whole
     table — the hash match proves append ≡ rebuild, bit for bit (the
     centroid seeds, vec_id 0..15, all live in the base split)."""
-    from datapipeline_omnichanneltobigquery_spark.plans.persistence import SCRATCH
+    from datapipeline_omnichanneltobigquery_spark.plans.persistence import scratch_path
 
     emb = read_table(spark, sf_dir, "embeddings")
     is_batch = (F.col("vec_id") >= 16) & (F.col("vec_id") % 7 == 3)
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    path = f"{SCRATCH}/ivf_index_incr_{sf_tag}"
+    path = scratch_path(spark, sf_dir, "ivf_index_incr")
     sim.build_ivf_index(emb.filter(~is_batch), path, n_centroids=16)
     sim.append_to_ivf_index(spark, path, emb.filter(is_batch))
     return sim.ivf_topk_join_from_index(
@@ -419,11 +415,10 @@ def similarity_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     touched per query.  Deterministic seeds + ordered folds → the
     composed top-5 hash-matches the definitional oracle (exact ADC over
     the same probed clusters and codebook assignments)."""
-    from datapipeline_omnichanneltobigquery_spark.plans.persistence import SCRATCH
+    from datapipeline_omnichanneltobigquery_spark.plans.persistence import scratch_path
 
     emb = read_table(spark, sf_dir, "embeddings")
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    path = f"{SCRATCH}/ivf_pq_index_{sf_tag}"
+    path = scratch_path(spark, sf_dir, "ivf_pq_index")
     sim.build_ivf_pq_index(emb, path, n_centroids=16, m_sub=8, n_codes=16, dim=EMB_DIM)
     return sim.ivf_pq_topk_join_from_index(
         spark, path, emb.filter(F.col("vec_id") < 4), k=5, n_probe=4, m_sub=8, dim=EMB_DIM
@@ -448,12 +443,11 @@ def similarity_ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     what the composition actually costs vs either piece alone
     ([[similarity_ann_recall]], [[similarity_pq_recall]]).  Deterministic
     on both sides, so the recall NUMBERS hash-gate."""
-    from datapipeline_omnichanneltobigquery_spark.plans.persistence import SCRATCH
+    from datapipeline_omnichanneltobigquery_spark.plans.persistence import scratch_path
 
     emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 4)
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    path = f"{SCRATCH}/ivf_pq_index_{sf_tag}"
+    path = scratch_path(spark, sf_dir, "ivf_pq_index")
     sim.build_ivf_pq_index(emb, path, n_centroids=16, m_sub=8, n_codes=16, dim=EMB_DIM)
     exact = sim.cosine_topk_join(queries, emb, k=5)
     approx = sim.ivf_pq_topk_join_from_index(
@@ -480,12 +474,11 @@ def similarity_ivf_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     append ≡ rebuild, bit for bit (the centroid/codebook seeds, vec_id
     0..15, all live in the base split — the append_to_ivf_index
     discipline)."""
-    from datapipeline_omnichanneltobigquery_spark.plans.persistence import SCRATCH
+    from datapipeline_omnichanneltobigquery_spark.plans.persistence import scratch_path
 
     emb = read_table(spark, sf_dir, "embeddings")
     is_batch = (F.col("vec_id") >= 16) & (F.col("vec_id") % 7 == 3)
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    path = f"{SCRATCH}/ivf_pq_index_incr_{sf_tag}"
+    path = scratch_path(spark, sf_dir, "ivf_pq_index_incr")
     sim.build_ivf_pq_index(
         emb.filter(~is_batch), path, n_centroids=16, m_sub=8, n_codes=16, dim=EMB_DIM
     )
@@ -1666,14 +1659,13 @@ def corpus_prep_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the batch (pinned in tests/test_llm_ops.py) — corpus text is never
     rescanned; the composed oracle hash-checks the whole incremental path
     (::prepare_corpus_incremental)."""
-    from datapipeline_omnichanneltobigquery_spark.plans.persistence import SCRATCH
+    from datapipeline_omnichanneltobigquery_spark.plans.persistence import scratch_path
 
     docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 29 != 7)
     bench = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 29 == 7)
     existing = docs.filter(F.col("doc_id") % 3 != 0)
     batch = docs.filter(F.col("doc_id") % 3 == 0)
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    path = f"{SCRATCH}/dedup_index_{sf_tag}"
+    path = scratch_path(spark, sf_dir, "dedup_index")
     cp.build_dedup_index(existing, "doc_id", "text", path)
     return cp.prepare_corpus_incremental(
         spark, path, batch, bench, "doc_id", "text", min_quality=0.7
@@ -1961,11 +1953,10 @@ def text_trigram_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     only for candidates.  LOSSLESS by the trigram-containment property,
     so it hash-matches the definitional full-scan oracle
     (operators/ir.py::trigram_search_from_index)."""
-    from datapipeline_omnichanneltobigquery_spark.plans.persistence import SCRATCH
+    from datapipeline_omnichanneltobigquery_spark.plans.persistence import scratch_path
 
     docs = read_table(spark, sf_dir, "documents")
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    path = f"{SCRATCH}/trigram_index_{sf_tag}"
+    path = scratch_path(spark, sf_dir, "trigram_index")
     ir.build_trigram_index(docs, path, "doc_id", "text")
     return ir.trigram_search_from_index(spark, path, docs, "fast merge", "doc_id", "text")
 

@@ -6,7 +6,10 @@ the write→read cycle is only correct if both directions preserve values.
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
+from pyspark import SparkFiles
 from pyspark.sql import DataFrame, SparkSession
 
 from datapipeline_omnichanneltobigquery_spark.functions.scalars import money
@@ -19,9 +22,20 @@ from datapipeline_omnichanneltobigquery_spark.sinks.layout import (
 )
 from datapipeline_omnichanneltobigquery_spark.sources.tables import read_table
 
-# Scratch location inside the repo (gitignored) so the query is runnable from
-# any cwd the driver uses; overwrite mode makes reruns idempotent.
-SCRATCH = "/root/repo/.scratch"
+# Root of the builders' scratch directories (indexes, round-trip tables).
+# None: the driver's per-session temporary directory under spark.local.dir,
+# which Spark deletes when the session stops.  A harness may assign a path.
+SCRATCH: str | None = None
+
+
+def scratch_path(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """The directory a builder writes ``name`` for the tables of ``sf_dir``
+    under: ``<root>/<applicationId>/<name>_<sf tag>``, so two sessions never
+    share one.  ``root`` is :data:`SCRATCH`, read at call time; overwrite
+    mode makes reruns in one session idempotent."""
+    root = SCRATCH or SparkFiles.getRootDirectory()
+    sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    return os.path.join(root, spark.sparkContext.applicationId, f"{name}_{sf_tag}")
 
 
 @query(
@@ -56,8 +70,7 @@ def sink_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     omnichannel_to_bq.py:145-152), proving the text round-trip preserves
     values exactly (Java double repr round-trips bit-exactly; the read uses
     an explicit schema, never autodetect re-inference)."""
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = f"{SCRATCH}/roundtrip_orders_{sf_tag}"
+    path = scratch_path(spark, sf_dir, "roundtrip_orders")
     out = read_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
@@ -74,7 +87,7 @@ def sink_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("yr").cast("int").alias("yr"),
     )
 
-    csv_path = f"{SCRATCH}/roundtrip_orders_csv_{sf_tag}"
+    csv_path = scratch_path(spark, sf_dir, "roundtrip_orders_csv")
     out.filter(F.col("yr") == 1997).write.mode("overwrite").option("header", "true").csv(csv_path)
     csv_back = (
         spark.read.option("header", "true")
@@ -151,8 +164,7 @@ def range_sorted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     spans are disjoint by construction; tests/test_layout.py proves it from
     the footers), and the oracle on the ORIGINAL table proves the re-layout
     lost nothing."""
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = f"{SCRATCH}/events_range_sorted_{sf_tag}"
+    path = scratch_path(spark, sf_dir, "events_range_sorted")
     ev = read_table(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "value")
     write_range_sorted(ev, path, "user_id", n_partitions=8)
     return (

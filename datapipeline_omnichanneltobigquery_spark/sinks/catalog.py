@@ -5,13 +5,15 @@ Maps omnichannel_to_bq.py:125-201 onto the Spark catalog:
 * ``import_to_table`` (CSV load, autodetect, WRITE_TRUNCATE, :143-165)
   → :func:`overwrite_table` — a direct ``saveAsTable(mode='overwrite')``,
   keeping the types that were just cast instead of round-tripping text;
-* staging→MERGE→drop lifecycle (:296-301) → :func:`upsert_into_table`, whose
-  merge-and-swap :func:`merge_into_table` the streaming upsert shares;
+* staging→MERGE→drop lifecycle (:296-301) → :func:`upsert_into_table`, the
+  one merge, batch and streaming: Spark merges straight from a DataFrame, so
+  the staging table BigQuery's MERGE needs as its source is not written;
 * ``list_tables`` (:132-141) → ``spark.catalog.listTables``;
 * ``drop_table`` (not_found_ok, :193-201) → ``DROP TABLE IF EXISTS``;
 * post-load COUNT(*) verification (:159, :186) → a ``count(1)``
-  ``Observation`` on the write job itself, so the loaded and merged counts
-  cost no read-back scan; :func:`row_count` stays the table-level COUNT(*).
+  ``Observation`` on the write job of :func:`overwrite_table`, the one
+  counted writer, so the loaded and merged counts cost no read-back scan;
+  :func:`row_count` stays the table-level COUNT(*).
 
 For an actual BigQuery deployment the same DataFrames go through
 ``df.write.format('bigquery')`` (spark-bigquery-connector); that writer is
@@ -27,17 +29,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 
 from datapipeline_omnichanneltobigquery_spark.operators.normalize import observed
 from datapipeline_omnichanneltobigquery_spark.operators.upsert import upsert
-
-
-def _save_counted(df: DataFrame, name: str, partition_by: list[str] | None = None) -> int:
-    """Overwrite-save ``df`` as parquet table ``name`` and return its row
-    count, observed on the write job (no second pass over the table)."""
-    obs = Observation()
-    writer = df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").format("parquet")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.saveAsTable(name)
-    return observed(obs)["n"]
 
 
 def swap_table(spark: SparkSession, main_table: str, staged_table: str) -> None:
@@ -64,7 +55,8 @@ def swap_table(spark: SparkSession, main_table: str, staged_table: str) -> None:
 
 def overwrite_table(df: DataFrame, name: str, partition_by: list[str] | None = None) -> int:
     """Create-or-truncate load (WRITE_TRUNCATE, :147-152); returns the
-    loaded row count (:159), observed on the write job.
+    loaded row count (:159), observed on the write job (no second pass over
+    the table).
 
     Parquet managed table: at cluster scale the write is parallel per
     partition; no driver materialization.  ``partition_by`` hive-partitions
@@ -72,10 +64,15 @@ def overwrite_table(df: DataFrame, name: str, partition_by: list[str] | None = N
     (PartitionFilters in the scan) — the first thing to reach for on a
     100 TB time-series table (partition by day, filter by day).
     """
-    return _save_counted(df, name, partition_by)
+    obs = Observation()
+    writer = df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").format("parquet")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.saveAsTable(name)
+    return observed(obs)["n"]
 
 
-def merge_into_table(
+def upsert_into_table(
     spark: SparkSession,
     increment: DataFrame,
     main_table: str,
@@ -84,40 +81,28 @@ def merge_into_table(
 ) -> int:
     """MERGE ``increment`` into ``main_table`` on ``key`` (:176-182) and
     write-new-then-swap the result in under the main name; returns the
-    merged row count, observed on the write job.
+    merged row count (:186), observed on the write job.
 
     The merge is the anti-join + union plan of
     :func:`datapipeline_omnichanneltobigquery_spark.operators.upsert.upsert`
     with the increment broadcast; ``dedupe_by`` keeps the latest row per key
-    within the increment.  The write of ``<main>__merged`` has read all of
-    main before :func:`swap_table` renames it.  Crash-safe, not
-    reader-atomic (see :func:`swap_table`).
+    within the increment.  The increment is snapshotted lazily
+    (``localCheckpoint(eager=False)``), so the broadcast anti-join and the
+    inserted rows read one materialization of it — what the reference's
+    staging table guaranteed — and its source runs once, in the broadcast
+    job.  The write of ``<main>__merged`` has read all of main before
+    :func:`swap_table` renames it.  Crash-safe, not reader-atomic (see
+    :func:`swap_table`).
     """
     merged = upsert(
         spark.table(main_table),
-        increment,
+        increment.localCheckpoint(eager=False),
         key=key,
         broadcast_staging=True,
         dedupe_staging_by=dedupe_by,
     )
-    n = _save_counted(merged, f"{main_table}__merged")
+    n = overwrite_table(merged, f"{main_table}__merged")
     swap_table(spark, main_table, f"{main_table}__merged")
-    return n
-
-
-def upsert_into_table(
-    spark: SparkSession,
-    staging_df: DataFrame,
-    main_table: str,
-    key: str = "id",
-    staging_table: str = "__staging",
-) -> int:
-    """The full reference update path (:296-301): write staging,
-    :func:`merge_into_table` on ``key``, drop staging; returns the merged
-    row count (:186), observed on the merge's write job."""
-    staging_df.write.mode("overwrite").format("parquet").saveAsTable(staging_table)
-    n = merge_into_table(spark, spark.table(staging_table), main_table, key=key)
-    drop_table(spark, staging_table)
     return n
 
 

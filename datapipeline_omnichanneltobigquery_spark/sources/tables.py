@@ -11,12 +11,15 @@ The ten testdata tables are read under schemas declared in ``SCHEMAS``
 rather than inferred.  Spark infers a parquet schema with a one-task job,
 so an undeclared read costs one Spark job per call, and the query registry
 reads tables from hundreds of call sites.  Each read first checks the
-declared columns against the file's parquet footer on the driver (pyarrow,
-well under a millisecond, no cache), and fails with the column's name on a
-mismatch instead of letting Spark read a missing column as NULL.
+declared columns against a parquet footer on the driver (pyarrow, well
+under a millisecond, no cache), and fails with the column's name on a
+mismatch instead of letting Spark read a missing column as NULL.  A table
+is one parquet file or a directory of part files, the layout Spark writes.
 """
 
 from __future__ import annotations
+
+import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -66,11 +69,22 @@ def _spark_kind(at: pa.DataType) -> str:
 
 
 def _checked_schema(path: str, declared: StructType) -> StructType:
-    """``declared`` as it must be read from ``path``, checked against the
-    file's footer on the driver (no Spark job).  A declared column that is
-    missing or of another kind raises ``ValueError``, where Spark would
-    silently read a missing column as NULL; undeclared columns are not read."""
-    footer = pq.read_schema(path)
+    """``declared`` as it must be read from ``path``, checked against a
+    parquet footer on the driver (no Spark job).  For a directory of part
+    files only the footer of the first part file in sorted order is
+    checked, the file schema inference without ``mergeSchema`` reads too.
+    A declared column that is missing or of another kind raises
+    ``ValueError``, where Spark would silently read a missing column as
+    NULL; undeclared columns are not read."""
+    if os.path.isdir(path):
+        # Spark's listing skips names starting with `_` or `.` (_SUCCESS,
+        # .crc files)
+        parts = sorted(f for f in os.listdir(path) if not f.startswith(("_", ".")))
+        if not parts:
+            raise ValueError(f"{path}: directory holds no part file")
+        footer = pq.read_schema(os.path.join(path, parts[0]))
+    else:
+        footer = pq.read_schema(path)
     fields = []
     for field in declared:
         kind = field.dataType.simpleString()
@@ -94,8 +108,9 @@ def _checked_schema(path: str, declared: StructType) -> StructType:
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table as a DataFrame under its declared schema.
 
-    The schema comes from ``SCHEMAS`` and is checked against the file's
-    parquet footer on the driver, so the read runs no Spark job, where an
+    The schema comes from ``SCHEMAS`` and is checked against a parquet
+    footer on the driver (for a directory of part files, the first part
+    file's only), so the read runs no Spark job, where an
     undeclared read runs a schema-inference job on every call.  Plain
     parquet scan, so filters/projections placed on the result push down
     into it (check ``PushedFilters`` in ``.explain``).

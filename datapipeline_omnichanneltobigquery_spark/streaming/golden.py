@@ -34,7 +34,6 @@ import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming import StreamingQuery
 
 from datapipeline_omnichanneltobigquery_spark.streaming.sketches import (
     _last_applied,
@@ -120,32 +119,3 @@ def maintain_golden_batch(
     if os.path.exists(state_path):
         part = _merge(spark.read.parquet(state_path), part, rules)
     _swap_state(part.localCheckpoint(), state_path, marker_batch_id=batch_id)
-
-
-def streaming_golden_maintain(
-    stream: DataFrame,
-    state_path: str,
-    id_col: str,
-    cluster_expr,
-    rules,
-    checkpoint_dir: str,
-    *,
-    recency_col: str | None = None,
-    trigger_available_now: bool = True,
-) -> StreamingQuery:
-    """Start the golden-record maintainer; query current goldens at any
-    time with ``golden_view(spark.read.parquet(state_path), rules)``."""
-
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.isEmpty():
-            maintain_golden_batch(
-                batch_df, state_path, id_col, cluster_expr, rules, batch_id,
-                recency_col,
-            )
-
-    writer = stream.writeStream.foreachBatch(_fold).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

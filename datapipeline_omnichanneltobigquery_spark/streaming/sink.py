@@ -3,13 +3,13 @@
 The reference's update path (staging → MERGE → drop,
 omnichannel_to_bq.py:296-301) run continuously: each micro-batch of changes
 merges into the main table by key.  ``foreachBatch`` hands every micro-batch
-to :func:`~datapipeline_omnichanneltobigquery_spark.sinks.catalog.merge_into_table`,
+to :func:`~datapipeline_omnichanneltobigquery_spark.sinks.catalog.upsert_into_table`,
 the merge-and-swap the batch update path uses — one code path, batch and
-streaming.
+streaming, and no staging table in either.
 
 Scale notes: per-batch the main table is read and rewritten; on a real
 deployment the main table lives in a format with transactional MERGE
-(Delta/Iceberg) and the body of ``merge_into_table`` becomes ``MERGE INTO`` —
+(Delta/Iceberg) and the body of ``upsert_into_table`` becomes ``MERGE INTO`` —
 the orchestration (dedupe batch, broadcast increment, key semantics) is
 unchanged.  Batches are deduped keep-latest first so a batch containing the
 same key twice applies deterministically.
@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-from datapipeline_omnichanneltobigquery_spark.sinks.catalog import merge_into_table
+from datapipeline_omnichanneltobigquery_spark.sinks.catalog import upsert_into_table
 
 
 def streaming_upsert(
@@ -42,7 +42,7 @@ def streaming_upsert(
     caller_spark = changes.sparkSession
 
     def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        merge_into_table(batch_df.sparkSession, batch_df, main_table, key=key, dedupe_by=order_col)
+        upsert_into_table(batch_df.sparkSession, batch_df, main_table, key=key, dedupe_by=order_col)
         caller_spark.catalog.refreshTable(main_table)
 
     writer = changes.writeStream.foreachBatch(_merge_batch).option(

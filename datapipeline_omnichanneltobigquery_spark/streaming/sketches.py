@@ -159,37 +159,6 @@ def maintain_qsketch_batch(
     _swap_state(regs.localCheckpoint(), register_path, marker_batch_id=batch_id)
 
 
-def streaming_qsketch_maintain(
-    stream: DataFrame,
-    register_path: str,
-    group_col: str,
-    value_col: str,
-    checkpoint_dir: str,
-    *,
-    lo: float,
-    hi: float,
-    n_bins: int = 256,
-    trigger_available_now: bool = True,
-) -> StreamingQuery:
-    """Start a stream that keeps the quantile-sketch register table at
-    ``register_path`` current — "p99 latency so far" stays queryable from
-    ≤ n_bins rows per group without ever rescanning history."""
-
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.isEmpty():
-            maintain_qsketch_batch(
-                batch_df, register_path, group_col, value_col, batch_id,
-                lo, hi, n_bins,
-            )
-
-    writer = stream.writeStream.foreachBatch(_fold).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def streaming_hll_maintain(
     stream: DataFrame,
     register_path: str,

@@ -45,21 +45,9 @@ def test_simhash_finds_near_identical_docs(spark):
     assert recall >= 0.8, f"simhash recall {recall:.2f} over {len(true_pairs)} true pairs"
 
 
-def test_connected_components_chain_and_clique(spark):
+def test_connected_components_star_chain_and_clique(spark):
     """A 4-node chain (max diameter for its size) and a separate triangle
     must each collapse to one cluster labeled by the component min."""
-    from datapipeline_omnichanneltobigquery_spark.operators.dedup import connected_components
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12)],
-        "id_a long, id_b long",
-    )
-    got = {(r.id, r.cluster_id) for r in connected_components(edges).collect()}
-    assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10), (12, 10)}
-
-
-def test_connected_components_star_chain_and_clique(spark):
-    """The large-star/small-star variant produces the identical labeling."""
     from datapipeline_omnichanneltobigquery_spark.operators.dedup import (
         connected_components_star,
     )

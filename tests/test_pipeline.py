@@ -7,11 +7,51 @@ import pytest
 
 from datapipeline_omnichanneltobigquery_spark.pipeline import run_pipeline
 from datapipeline_omnichanneltobigquery_spark.sinks.catalog import drop_table, list_tables
+from datapipeline_omnichanneltobigquery_spark.sources.paginated import paginated_to_df
 
 from tests.helpers import count_jobs
 
 
 SCHEMA = "id string, created_at string, subject string"
+
+
+def _logged_pages(log: str, stamps: dict[int, list]):
+    """A page function over ``stamps`` (page → created_at values) that
+    appends each page number it serves to the file ``log``.  Nested, so
+    cloudpickle ships it by value: executors cannot import the tests
+    package."""
+
+    def _fetch(page: int) -> list[dict]:
+        with open(log, "a") as f:
+            f.write(f"{page}\n")
+        return [
+            {"id": str(page * 10 + i), "created_at": ts, "subject": f"s{page}{i}"}
+            for i, ts in enumerate(stamps.get(page, []))
+        ]
+
+    return _fetch
+
+
+def _page_calls(log: str) -> list[int]:
+    with open(log) as f:
+        return sorted(int(line) for line in f)
+
+
+_STAMPS = {
+    1: ["2024-01-05 00:00:00", None, "2024-01-02 00:00:00"],
+    2: ["2024-01-09 00:00:00", "2024-01-01 00:00:00", "2024-01-07 00:00:00"],
+    3: [None, "2024-01-03 00:00:00", "2024-01-06 00:00:00"],
+}
+
+
+def _first_five_by_created_at(stamps: dict[int, list]) -> list[int]:
+    ordered = sorted(
+        (ts, page * 10 + i)
+        for page, col in stamps.items()
+        for i, ts in enumerate(col)
+        if ts is not None
+    )
+    return [i for _, i in ordered[:5]]
 
 
 def test_pipeline_new_then_update(spark):
@@ -38,6 +78,7 @@ def test_pipeline_new_then_update(spark):
     res = run_pipeline(
         spark, fetch_page=_fetch, n_pages=5, schema=SCHEMA, action="new", table="t_pipe"
     )
+    tables = set(list_tables(spark))
     assert res.rows_loaded == 7
     assert res.cast_report["int"] == ["id"]
     assert res.cast_report["timestamp"] == ["created_at"]
@@ -55,7 +96,9 @@ def test_pipeline_new_then_update(spark):
     assert res2.rows_loaded == 8
     got2 = {r["id"]: r["subject"] for r in spark.table("t_pipe").collect()}
     assert got2[2] == "CHANGED" and got2[99] == "new" and got2[0] == "s0"
-    assert "__staging" not in list_tables(spark)
+    # the merge's `<table>__merged` and `<table>__backup` are gone, and it
+    # created no other table
+    assert set(list_tables(spark)) == tables
     drop_table(spark, "t_pipe")
 
 
@@ -97,49 +140,73 @@ def test_pipeline_preview_costs_one_source_pass(spark, tmp_path):
     the sort's range sample), and the head is the first 5 rows in
     created_at order, nulls last."""
     log = str(tmp_path / "page_calls.log")
-    stamps = {
-        1: ["2024-01-05 00:00:00", None, "2024-01-02 00:00:00"],
-        2: ["2024-01-09 00:00:00", "2024-01-01 00:00:00", "2024-01-07 00:00:00"],
-        3: [None, "2024-01-03 00:00:00", "2024-01-06 00:00:00"],
-    }
-    n_pages = len(stamps)
-
-    def _fetch(page: int) -> list[dict]:
-        with open(log, "a") as f:
-            f.write(f"{page}\n")
-        return [
-            {"id": str(page * 10 + i), "created_at": ts, "subject": f"s{page}{i}"}
-            for i, ts in enumerate(stamps[page])
-        ]
-
-    def _calls() -> int:
-        with open(log) as f:
-            return len(f.readlines())
-
-    common = dict(fetch_page=_fetch, n_pages=n_pages, schema=SCHEMA, action="new")
+    n_pages = len(_STAMPS)
+    common = dict(
+        fetch_page=_logged_pages(log, _STAMPS), n_pages=n_pages, schema=SCHEMA, action="new"
+    )
     try:
         run_pipeline(spark, table="t_no_preview", **common)
-        plain = _calls()
+        plain = len(_page_calls(log))
         assert plain == n_pages
         res = run_pipeline(spark, table="t_preview", show_preview=True, **common)
-        assert _calls() - plain == n_pages
-        ordered = sorted(
-            (ts, page * 10 + i)
-            for page, col in stamps.items()
-            for i, ts in enumerate(col)
-            if ts is not None
-        )
-        assert [r["id"] for r in res.head] == [i for _, i in ordered[:5]]
+        assert len(_page_calls(log)) - plain == n_pages
+        assert [r["id"] for r in res.head] == _first_five_by_created_at(_STAMPS)
     finally:
         drop_table(spark, "t_no_preview")
         drop_table(spark, "t_preview")
 
 
+def test_pipeline_update_preview_costs_one_source_pass(spark, tmp_path):
+    """An update's preview is the first 5 increment rows in created_at
+    order, nulls last, though the merge itself does not sort; the preview
+    and the merge share one fetch of each page."""
+    log = str(tmp_path / "page_calls.log")
+    main = spark.createDataFrame([("1", "2024-01-04 00:00:00", "m")], SCHEMA)
+    try:
+        run_pipeline(spark, source_df=main, action="new", table="t_upd_preview")
+        res = run_pipeline(
+            spark,
+            fetch_page=_logged_pages(log, _STAMPS),
+            n_pages=len(_STAMPS),
+            schema=SCHEMA,
+            action="update",
+            table="t_upd_preview",
+            show_preview=True,
+        )
+        assert _page_calls(log) == sorted(_STAMPS)
+        assert [r["id"] for r in res.head] == _first_five_by_created_at(_STAMPS)
+        assert res.rows_loaded == 1 + sum(len(c) for c in _STAMPS.values())
+    finally:
+        drop_table(spark, "t_upd_preview")
+
+
+def test_pipeline_update_reads_caller_pages_once(spark, tmp_path):
+    """A caller's un-persisted paginated frame passed as ``source_df`` is
+    fetched once per page by an update: the merge's broadcast anti-join
+    and its inserted rows read one snapshot of the increment."""
+    log = str(tmp_path / "page_calls.log")
+    stamps = {1: ["2024-02-01 00:00:00", None], 2: ["2024-02-03 00:00:00"]}
+    main = spark.createDataFrame(
+        [("10", "2024-01-01 00:00:00", "old"), ("5", "2024-01-02 00:00:00", "keep")], SCHEMA
+    )
+    try:
+        run_pipeline(spark, source_df=main, action="new", table="t_upd_pages")
+        inc = paginated_to_df(spark, _logged_pages(log, stamps), len(stamps), SCHEMA)
+        res = run_pipeline(spark, source_df=inc, action="update", table="t_upd_pages")
+        assert _page_calls(log) == [1, 2]
+        assert res.rows_loaded == 4
+        got = {r["id"]: r["subject"] for r in spark.table("t_upd_pages").collect()}
+        assert got == {5: "keep", 10: "s10", 11: "s11", 20: "s20"}
+    finally:
+        drop_table(spark, "t_upd_pages")
+
+
 def test_pipeline_job_counts(spark):
     """Row counts ride the write jobs, so neither path reads its table back
     for a count, and the fetched pages are cached, so the sort's sample and
-    the write share one fetch: 4 jobs for a 'new' run over pages, 5 for an
-    'update' from a frame."""
+    the write share one fetch: 4 jobs for a 'new' run over pages.  An
+    'update' from a frame runs 2: the broadcast of the increment and the
+    merged write, with no staging table and no sort."""
 
     def _fetch(page: int) -> list[dict]:
         return [
@@ -160,7 +227,7 @@ def test_pipeline_job_counts(spark):
         update = count_jobs(
             spark, lambda: run_pipeline(spark, source_df=upd, action="update", table="t_jobs")
         )
-        assert (new, update) == (4, 5)
+        assert (new, update) == (4, 2)
         assert spark.table("t_jobs").count() == 10
     finally:
         drop_table(spark, "t_jobs")

@@ -75,11 +75,10 @@ def test_upsert_idempotent_and_key_unique(spark, main_ids, stage_ids):
     )
 )
 def test_connected_components_matches_union_find(spark, edges):
-    """Both distributed CC algorithms (min-label propagation and
-    large-star/small-star) ≡ a sequential union-find, for arbitrary small
-    graphs (chains, cliques, isolated pairs, multi-edges)."""
+    """Large-star/small-star connected components ≡ a sequential
+    union-find, for arbitrary small graphs (chains, cliques, isolated pairs,
+    multi-edges)."""
     from datapipeline_omnichanneltobigquery_spark.operators.dedup import (
-        connected_components,
         connected_components_star,
     )
 
@@ -101,8 +100,6 @@ def test_connected_components_matches_union_find(spark, edges):
     want = {n: min(members) for members in expected.values() for n in members}
 
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {r["id"]: r["cluster_id"] for r in connected_components(df).collect()}
-    assert got == want
     got_star = {r["id"]: r["cluster_id"] for r in connected_components_star(df).collect()}
     assert got_star == want
 

@@ -1,4 +1,4 @@
-"""Catalog sink lifecycle: overwrite → staging upsert → drop (the reference's
+"""Catalog sink lifecycle: overwrite → upsert (merge and swap) → drop (the reference's
 BigQueryManager surface, omnichannel_to_bq.py:125-201)."""
 
 from __future__ import annotations
@@ -28,12 +28,12 @@ def test_upsert_lifecycle(spark):
     main = spark.createDataFrame([(1, "a"), (2, "b")], "id long, name string")
     overwrite_table(main, "t_life")
     staging = spark.createDataFrame([(2, "B2"), (3, "c")], "id long, name string")
-    n = upsert_into_table(spark, staging, "t_life", key="id", staging_table="t_stage")
+    n = upsert_into_table(spark, staging, "t_life", key="id")
     assert n == 3
     got = {r["id"]: r["name"] for r in spark.table("t_life").collect()}
     assert got == {1: "a", 2: "B2", 3: "c"}
-    # staging is transient (:296-301)
-    assert "t_stage" not in list_tables(spark)
+    # the merge's intermediate tables are transient, as staging was (:296-301)
+    assert not {"t_life__merged", "t_life__backup"} & set(list_tables(spark))
     assert table_columns(spark, "t_life") == ["id", "name"]
     drop_table(spark, "t_life")
 
@@ -89,6 +89,25 @@ def test_sink_roundtrip_query_prunes(spark):
     plan = plan_string(q)
     assert "PartitionFilters" in plan and "1997" in plan, plan
     assert q.count() > 0
+
+
+def test_scratch_path_is_per_application(spark, monkeypatch, tmp_path):
+    """Builders' scratch directories are keyed by the session's application
+    id and live under the session's temporary directory, outside the
+    source tree; an assigned ``SCRATCH`` root is read at call time."""
+    import os
+
+    from pyspark import SparkFiles
+
+    from datapipeline_omnichanneltobigquery_spark.plans import persistence
+
+    app = spark.sparkContext.applicationId
+    path = persistence.scratch_path(spark, "/data/sf0.001/", "ivf_index")
+    assert path == os.path.join(SparkFiles.getRootDirectory(), app, "ivf_index_sf0_001")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    assert not path.startswith(repo + os.sep)
+    monkeypatch.setattr(persistence, "SCRATCH", str(tmp_path))
+    assert persistence.scratch_path(spark, "/data/sf0.01", "x") == str(tmp_path / app / "x_sf0_01")
 
 
 def test_png_codec_roundtrip():

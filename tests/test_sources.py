@@ -100,6 +100,24 @@ def test_read_table_runs_no_spark_job(spark):
     assert jobs == dict.fromkeys(TABLES, 0)
 
 
+def test_read_table_reads_a_directory_of_part_files(spark, tmp_path):
+    """A table stored as a directory of part files, the layout Spark
+    writes, reads with no job and the same rows as the single file: only
+    the first part file's footer is checked."""
+    rows = pq.read_table(f"{SF_DIR}/region.parquet")
+    table_dir = tmp_path / "region.parquet"
+    table_dir.mkdir()
+    half = rows.num_rows // 2
+    pq.write_table(rows.slice(0, half), table_dir / "part-00000.parquet")
+    pq.write_table(rows.slice(half), table_dir / "part-00001.parquet")
+    (table_dir / "_SUCCESS").touch()
+    assert count_jobs(spark, lambda: read_table(spark, str(tmp_path), "region")) == 0
+    got = read_table(spark, str(tmp_path), "region")
+    want = read_table(spark, SF_DIR, "region")
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
 def _inferred(spark, sf_dir, name):
     """The schema an undeclared read gives, with read_table's ts cast."""
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
