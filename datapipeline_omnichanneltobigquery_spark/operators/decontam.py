@@ -160,7 +160,7 @@ def decontaminate_sql(
     # NOT EXISTS, not NOT IN: Spark's left_anti keeps a NULL-id train row
     # (a null join key matches nothing), while NOT IN over any non-empty
     # list yields NULL for it and drops it — NOT EXISTS matches the
-    # left_anti semantics exactly (same pattern as upsert_sql)
+    # left_anti semantics exactly (same pattern as the upsert_merge oracle)
     return f"""
     SELECT {select_cols} FROM {train_expr} tr
     WHERE NOT EXISTS (SELECT 1 FROM ({pairs}) p WHERE p.train_id = tr.{train_id})

@@ -40,17 +40,6 @@ from datapipeline_omnichanneltobigquery_spark.operators.normalize import observe
 # ---------------------------------------------------------------------------
 
 
-def dedup_exact(df: DataFrame, subset: list[str], keep_min: str) -> DataFrame:
-    """Exact dedup: one row per distinct ``subset``, keeping the MIN value of
-    ``keep_min`` (deterministic, unlike dropDuplicates' arbitrary winner).
-    Plan: partial+final hash aggregate — one shuffle on the dedup key.
-
-    Fine when ``subset`` is narrow.  For dedup on a document BODY, use
-    :func:`dedup_exact_keylist` — grouping on the full text makes the text
-    the shuffle key (giant-string hashing/sorting through the exchange)."""
-    return df.groupBy(*subset).agg(F.min(keep_min).alias(keep_min))
-
-
 def dedup_exact_keylist(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Fingerprint-keyed exact dedup keep-list: ``(fp, id)`` — one row per
     distinct ``text_col`` value, ``id`` = the MIN ``id_col`` among its

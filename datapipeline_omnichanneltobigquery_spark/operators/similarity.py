@@ -157,7 +157,7 @@ def _cosine_pairs_blocked(
     n·B vectors — choose B so 2n/B vectors fit a task (B ≈ n/50k) and the
     O(n²) flops spread over B² tasks; work is quadratic because EXACT
     all-pairs is — the sub-quadratic route is LSH/IVF candidate generation
-    (see ivf_assign) at the price of recall guarantees."""
+    (see build_ivf_index) at the price of recall guarantees."""
     import numpy as np
     import pandas as pd
 
@@ -278,28 +278,18 @@ def kmeans_refine(
     return cent
 
 
-def ivf_assign(
-    embeddings: DataFrame,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """Assign each vector to its nearest 'centroid' (deterministic seed
-    centroids: the first ``n_centroids`` corpus vectors by id — a k-means
-    iteration could refine them, but assignment mechanics are what matters
-    for the index shape).
-
-    Plan: pre-normalize once so each score is a single dot, broadcast the
-    centroid table, argmax via max_by — one wide map stage, one small agg,
-    no O(n²).  Output: (vec_id, cluster, cos_sim) — the bucketed index: at
-    deployment write it partitioned/bucketed by cluster for partition-pruned
-    probes.
-    """
-    return _assign_from_unit(_unit_df(embeddings, id_col, vec_col, dim), n_centroids, id_col, dim)
-
-
 def _assign_from_unit(unit: DataFrame, n_centroids: int, id_col: str, dim: int | None) -> DataFrame:
+    """Assign each unit vector (``__u``) to its nearest 'centroid'
+    (deterministic seed centroids: the first ``n_centroids`` corpus vectors
+    by id — a k-means iteration could refine them, but assignment mechanics
+    are what matters for the index shape).
+
+    Plan: vectors are pre-normalized, so each score is a single dot;
+    broadcast the centroid table, argmax via max_by — one wide map stage,
+    one small agg, no O(n²).  Output: (id, cluster, cos_sim) — the bucketed
+    index, which :func:`build_ivf_index` writes partitioned by cluster for
+    partition-pruned probes.
+    """
     cent = F.broadcast(
         unit.orderBy(id_col).limit(n_centroids).select(
             F.col(id_col).alias("cid"), F.col("__u").alias("cv")
@@ -510,7 +500,7 @@ def build_ivf_index(
 ) -> None:
     """Persist the IVF index: (id, unit vector, cluster) written as parquet
     HIVE-PARTITIONED BY CLUSTER, plus the centroid table beside it.  This is
-    the deployment form of :func:`ivf_assign`'s docstring promise — probes
+    the deployment form of the cluster assignment — probes
     against the persisted index open only ``n_probe`` cluster directories
     (PartitionFilters, pinned in tests), so each query reads
     n_probe/n_centroids of the corpus instead of scanning it."""

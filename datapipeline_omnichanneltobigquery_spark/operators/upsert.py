@@ -48,18 +48,6 @@ def upsert(
     return kept.unionByName(staging.select(*kept.columns))
 
 
-def upsert_sql(main_table: str, staging_table: str, columns: list[str], key: str = "id") -> str:
-    """The ANSI-SQL oracle form of :func:`upsert` (anti-join + union),
-    mirroring the reference's string-templated MERGE (:176-182) for engines
-    without MERGE support over plain files."""
-    collist = ", ".join(columns)
-    return (
-        f"SELECT {collist} FROM {main_table} T "
-        f"WHERE NOT EXISTS (SELECT 1 FROM {staging_table} S WHERE S.{key} = T.{key}) "
-        f"UNION ALL SELECT {collist} FROM {staging_table}"
-    )
-
-
 def snapshot_diff(
     old: DataFrame, new: DataFrame, key: str, compare_cols: list[str]
 ) -> DataFrame:

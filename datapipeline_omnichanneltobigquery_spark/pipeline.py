@@ -11,7 +11,10 @@ no staging table, and no sort, whose order the merged write would not
 keep.  Every stage is the Spark-first operator from this package; the
 chain stays one lazy plan until the sink.  The pipeline persists the source
 it fetched, and nothing else: the sort's range sample, a preview and the
-write would otherwise call the paginated API once each per page.
+write would otherwise call the paginated API once each per page.  The page
+cache is filled by a job of its own, ahead of the first plan that reads it:
+on 'new', a trace shows the Python fetch tasks first, then the sort's
+sample over the cache, its shuffle and the write.
 """
 
 from __future__ import annotations
@@ -63,9 +66,9 @@ def run_pipeline(
     if source_df is None:
         if fetch_page is None or schema is None:
             raise ValueError("need source_df, or fetch_page + schema")
-        # the first job (preview, the sort's sample or the merge's
-        # broadcast) fills the cache; every later one reads it instead of
-        # the API
+        # a job of its own fills the cache ahead of the first plan that
+        # reads it (preview, sort or merge); every later job reads the cache
+        # instead of the API
         source_df = fetched = paginated_to_df(spark, fetch_page, n_pages, schema).persist()
     try:
         df = cast_columns(source_df)

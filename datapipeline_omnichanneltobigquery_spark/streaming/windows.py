@@ -155,7 +155,7 @@ def dedup_within_watermark(
 ) -> DataFrame:
     """Streaming exact dedup: keep the first arrival per key, with state
     bounded by the watermark horizon (``dropDuplicatesWithinWatermark``) —
-    the streaming twin of ``dedup_exact``.  Duplicates arriving within
+    the streaming form of batch exact dedup on ``key_cols``.  Duplicates arriving within
     ``watermark`` of each other collapse to one row; state for keys older
     than the horizon is evicted, which is what makes exactly-once dedup
     sustainable on an unbounded stream (an unbounded ``dropDuplicates``

@@ -1,24 +1,24 @@
-"""Lint: every top-level public function and class of the package is named
-somewhere outside its own definition.
+"""Lint: every top-level public function and class of the package is used
+in code somewhere outside its own definition.
 
-A symbol counts as used when its name appears as a word in the package,
-``tests/``, ``tools/``, ``perfbench/``, ``bench.py`` or
-``__spark_entry__.py``, anywhere but the lines of its own definition (this
-file's allowlist does not count).  ``@query`` builders are exempt: the
-registry decorator is their caller.
+A use is one of four things in the package, ``tests/``, ``tools/``,
+``perfbench/``, ``bench.py`` or ``__spark_entry__.py``, outside the
+symbol's own definition: a ``Name``, an ``Attribute`` (``mod.name``), an
+import alias (``from mod import name``), or a string constant exactly equal
+to the name (a ``getattr`` table).  A word in a docstring or a comment is
+not a use, and neither is this file's allowlist.  ``@query`` builders are
+exempt: the registry decorator is their caller.
 No Spark session is needed.
 """
 
 from __future__ import annotations
 
 import ast
-import re
 from collections import Counter
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "datapipeline_omnichanneltobigquery_spark"
-WORD = re.compile(r"\w+")
 
 # name -> why it stays without a caller
 ALLOWED = {
@@ -43,24 +43,38 @@ def _is_query_builder(node: ast.AST) -> bool:
     return False
 
 
+def _uses(tree: ast.AST) -> Counter:
+    """Each name ``tree`` uses in code, with how often."""
+    uses: Counter = Counter()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            uses[node.id] += 1
+        elif isinstance(node, ast.Attribute):
+            uses[node.attr] += 1
+        elif isinstance(node, ast.alias):
+            uses[node.name.rpartition(".")[2]] += 1
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            uses[node.value] += 1
+    return uses
+
+
 def dead_symbols(allowed=ALLOWED) -> list[str]:
     """``module.py::name`` of every public top-level definition that is
-    named nowhere outside itself and not in ``allowed``."""
-    texts = {p: p.read_text() for p in _searched_files()}
-    words = Counter(w for t in texts.values() for w in WORD.findall(t))
+    used nowhere outside itself and not in ``allowed``."""
+    trees = {p: ast.parse(p.read_text()) for p in _searched_files()}
+    uses: Counter = Counter()
+    for tree in trees.values():
+        uses += _uses(tree)
     dead = []
-    for path, text in texts.items():
+    for path, tree in trees.items():
         if PACKAGE not in path.parents:
             continue
-        lines = text.splitlines()
-        for node in ast.parse(text).body:
+        for node in tree.body:
             if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 continue
             if node.name.startswith("_") or node.name in allowed or _is_query_builder(node):
                 continue
-            start = min([node.lineno] + [d.lineno for d in node.decorator_list])
-            own = "\n".join(lines[start - 1 : node.end_lineno])
-            if words[node.name] == WORD.findall(own).count(node.name):
+            if uses[node.name] == _uses(node)[node.name]:
                 dead.append(f"{path.relative_to(PACKAGE)}::{node.name}")
     return sorted(dead)
 

@@ -92,13 +92,45 @@ def _named_pages(broken_page: int | None = None):
 
 
 def test_distributed_fetch_matches_sequential_one_partition_per_page(spark):
-    """One partition per page, rows fetched on executors, result identical
-    to the sequential fetch."""
+    """Four pages: one partition per page on four or more cores (one per
+    core below that), rows fetched on executors, result identical to the
+    sequential fetch."""
     df = paginated_to_df(spark, _named_pages(), 4, "id long, name string")
     got = sorted((r.id, r.name) for r in df.collect())
     seq = fetch_paginated(_named_pages(), count=3, max_pages=4)
     assert got == sorted((r["id"], r["name"]) for r in seq) and len(got) == 12
-    assert df.rdd.getNumPartitions() == 4  # one partition per page
+    assert df.rdd.getNumPartitions() == min(4, spark.sparkContext.defaultParallelism)
+
+
+def _logged_pages(log: str, n_pages: int):
+    """Pages 1..n_pages of two records each, page n_pages+1 empty; appends
+    each page number it serves to the file ``log`` (executors run in other
+    processes)."""
+
+    def fetch(page: int) -> list[dict]:
+        with open(log, "a") as f:
+            f.write(f"{page}\n")
+        if page > n_pages:
+            return []
+        return [{"id": page * 10 + i, "name": f"r{page}_{i}"} for i in range(2)]
+
+    return fetch
+
+
+def test_distributed_fetch_one_slice_of_pages_per_core(spark, tmp_path):
+    """More pages than cores: one task per core, each fetching a contiguous
+    slice of pages, every page fetched exactly once, and the rows of the
+    sequential fetch."""
+    cores = spark.sparkContext.defaultParallelism
+    n_pages = 2 * cores + 1
+    log = str(tmp_path / "page_calls.log")
+    df = paginated_to_df(spark, _logged_pages(log, n_pages), n_pages, "id long, name string")
+    assert df.rdd.getNumPartitions() == cores
+    got = sorted((r.id, r.name) for r in df.collect())
+    with open(log) as f:
+        assert sorted(int(line) for line in f) == list(range(1, n_pages + 1))
+    seq = fetch_paginated(_logged_pages(str(tmp_path / "seq.log"), n_pages), count=2)
+    assert got == sorted((r["id"], r["name"]) for r in seq) and len(got) == 2 * n_pages
 
 
 def test_distributed_fetch_partial_on_exhausted_page(spark):

@@ -105,3 +105,25 @@ def test_daemon_imports_outside_the_repo(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-3000:]
     assert out.stdout.splitlines()[-1] == str([10, 11, 12, 20, 21, 22, 30, 31, 32])
+
+
+def test_cast_columns_py4j_round_trips_are_bounded(spark, monkeypatch):
+    """With DataFrame call-site capture off, one 14-column ``cast_columns``
+    projection sends about 230 py4j commands; with it on, 760-940."""
+    from pyspark.errors import utils
+
+    from datapipeline_omnichanneltobigquery_spark.operators.normalize import cast_columns
+    from perfbench.deals import SCHEMA_DDL
+
+    monkeypatch.setattr(utils, "_enable_debugging_cache", None)  # re-read the conf
+    assert utils.is_debugging_enabled() is False
+
+    df = spark.createDataFrame([], SCHEMA_DDL)
+    assert len(df.columns) == 14
+    cast_columns(df)  # the first call also pays one-time lookups
+    client = spark.sparkContext._gateway._gateway_client
+    commands = []
+    send = client.send_command
+    monkeypatch.setattr(client, "send_command", lambda *a, **k: commands.append(1) or send(*a, **k))
+    cast_columns(df)
+    assert len(commands) <= 300, len(commands)
