@@ -16,6 +16,8 @@ import re
 
 from pyspark.sql import DataFrame
 
+from datapipeline_omnichanneltobigquery_spark.session import scoped_conf
+
 
 def plan_string(df: DataFrame, mode: str = "formatted") -> str:
     buf = io.StringIO()
@@ -95,11 +97,8 @@ def codegen_stage_count_of(build, spark) -> int:
     finalized at runtime), so this helper re-plans with AQE off; ``build``
     must construct the DataFrame fresh (a cached queryExecution would keep
     the AQE plan)."""
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
         s = plan_string(build(spark), mode="simple")
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
     return len(set(re.findall(r"\*\((\d+)\)", s)))
 
 

@@ -31,6 +31,7 @@ The configs here are the ones that matter at 100 TB just as much as on
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -52,6 +53,23 @@ def _default_driver_memory() -> str:
     except (OSError, StopIteration):
         return f"{cap_mb}m"
     return f"{min(total_kb // 2048, cap_mb)}m"
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, settings: dict[str, str]):
+    """Set the runtime confs ``settings`` for a ``with`` block, then restore
+    each key's previous value (unset if it was unset), also if it raised."""
+    prev = {k: spark.conf.get(k, None) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 # Spark's RocksDB-backed streaming state store: state lives off-heap in a

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 
 from datapipeline_omnichanneltobigquery_spark.operators.normalize import observed
 from datapipeline_omnichanneltobigquery_spark.operators.upsert import upsert
+from datapipeline_omnichanneltobigquery_spark.session import scoped_conf
 
 
 def swap_table(spark: SparkSession, main_table: str, staged_table: str) -> None:
@@ -42,7 +43,15 @@ def swap_table(spark: SparkSession, main_table: str, staged_table: str) -> None:
     transaction).  Deployments that need reader atomicity should target a
     transactional format (Delta/Iceberg MERGE or REPLACE TABLE) — this
     helper is the best the plain parquet catalog can do.
+
+    A partitioned ``staged_table`` raises ``ValueError`` before any rename:
+    ``RENAME`` leaves its partitions' locations at the old path, so it would
+    read no rows and the backup's drop would delete its data.
     """
+    # DESCRIBE runs no job; listColumns iterates its result in two
+    described = {r[0] for r in spark.sql(f"DESCRIBE {staged_table}").collect()}
+    if "# Partition Information" in described:
+        raise ValueError(f"cannot swap partitioned table {staged_table} in by rename")
     backup = f"{main_table}__backup"
     spark.sql(f"DROP TABLE IF EXISTS {backup}")
     spark.sql(f"ALTER TABLE {main_table} RENAME TO {backup}")
@@ -93,6 +102,12 @@ def upsert_into_table(
     job.  The write of ``<main>__merged`` has read all of main before
     :func:`swap_table` renames it.  Crash-safe, not reader-atomic (see
     :func:`swap_table`).
+
+    The write splits main's scan by bytes alone (``openCostInBytes`` 0):
+    Spark's 4 MB open cost per file would let the previous increment's tiny
+    files pack main's files into ever fewer splits, until one task rewrote
+    all of main.  A main in one file with one row group still scans as one
+    task; splitting that needs a shuffle.
     """
     merged = upsert(
         spark.table(main_table),
@@ -101,7 +116,8 @@ def upsert_into_table(
         broadcast_staging=True,
         dedupe_staging_by=dedupe_by,
     )
-    n = overwrite_table(merged, f"{main_table}__merged")
+    with scoped_conf(spark, {"spark.sql.files.openCostInBytes": "0"}):
+        n = overwrite_table(merged, f"{main_table}__merged")
     swap_table(spark, main_table, f"{main_table}__merged")
     return n
 

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import from_arrow_type
 from pyspark.sql.types import LongType, StructField, StructType, TimestampNTZType, TimestampType
 
+from datapipeline_omnichanneltobigquery_spark.session import scoped_conf
+
 # The testdata tables and their declared schemas: the types Spark's
 # own inference gives these files (the same at every scale factor).
 SCHEMAS = {
@@ -218,9 +220,18 @@ def unwrap_envelope(df: DataFrame, obj_key: str) -> DataFrame:
     return df.select(F.explode(F.col(obj_key)).alias("record")).select("record.*")
 
 
+# Aggregate pushdown is DSv2-only and the engine's default scans stay on v1
+# (stable plan shapes), so footer_stats flips these for its call only; the
+# aggregate must EXECUTE under them, hence the collect inside.
+AGGREGATE_PUSHDOWN = {
+    "spark.sql.sources.useV1SourceList": "",
+    "spark.sql.parquet.aggregatePushdown": "true",
+}
+
+
 def _footer_stats_df(spark: SparkSession, path: str, cols: list[str]) -> DataFrame:
     """The aggregate whose scan is answered from parquet footer statistics
-    (caller must have v2 parquet + aggregatePushdown active)."""
+    (caller must run it under ``AGGREGATE_PUSHDOWN``)."""
     aggs = [F.count(F.lit(1)).alias("n_rows")]
     for c in cols:
         aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
@@ -233,30 +244,13 @@ def footer_stats(spark: SparkSession, path: str, cols: list[str]) -> dict:
     ``PushedAggregation``, pinned in tests).  At 100 TB this is instant
     profiling vs a full scan: the numbers already sit in every footer.
 
-    Aggregate pushdown is a DSv2-only feature and the engine's default scans
-    stay on v1 (stable plan shapes), so the two confs are flipped for this
-    call and restored after — the aggregate must EXECUTE while they are
-    active, hence the collect inside.
-
     Eligibility: every requested column must have a pushdown-supported type
     (numerics, strings, dates — NOT timestamp_ntz), the path must be plain
     parquet, and there must be no filters; otherwise Spark silently falls
     back to a real scan — results identical, just not metadata-speed.  The
     plan-shape test pins the pushdown for eligible columns."""
-    prev = {
-        k: spark.conf.get(k, None)
-        for k in ("spark.sql.sources.useV1SourceList", "spark.sql.parquet.aggregatePushdown")
-    }
-    spark.conf.set("spark.sql.sources.useV1SourceList", "")
-    spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-    try:
+    with scoped_conf(spark, AGGREGATE_PUSHDOWN):
         return _footer_stats_df(spark, path, cols).collect()[0].asDict()
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def read_parquet_evolved(spark: SparkSession, path: str) -> DataFrame:

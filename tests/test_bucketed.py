@@ -6,6 +6,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from datapipeline_omnichanneltobigquery_spark.plans import audit
+from datapipeline_omnichanneltobigquery_spark.session import scoped_conf
 from datapipeline_omnichanneltobigquery_spark.sinks.bucketed import bucketed_join, write_bucketed
 from datapipeline_omnichanneltobigquery_spark.sinks.catalog import drop_table
 from datapipeline_omnichanneltobigquery_spark.sources.tables import read_table
@@ -20,17 +21,16 @@ def test_bucketed_join_is_shuffle_free(spark):
     write_bucketed(lineitem, "b_lineitem", "orderkey", n_buckets=4)
     try:
         # disable auto-broadcast so a shuffle would otherwise be required
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = bucketed_join(spark, "b_lineitem", "b_orders", "orderkey")
-        assert audit.exchange_count(joined) == 0, audit.plan_string(joined)
-        # and it computes the same count as the plain join
-        plain = read_table(spark, SF_DIR, "lineitem").join(
-            read_table(spark, SF_DIR, "orders"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        assert joined.count() == plain.count()
+        with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+            joined = bucketed_join(spark, "b_lineitem", "b_orders", "orderkey")
+            assert audit.exchange_count(joined) == 0, audit.plan_string(joined)
+            # and it computes the same count as the plain join
+            plain = read_table(spark, SF_DIR, "lineitem").join(
+                read_table(spark, SF_DIR, "orders"),
+                F.col("l_orderkey") == F.col("o_orderkey"),
+            )
+            assert joined.count() == plain.count()
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         drop_table(spark, "b_orders")
         drop_table(spark, "b_lineitem")
 

@@ -127,3 +127,25 @@ def test_cast_columns_py4j_round_trips_are_bounded(spark, monkeypatch):
     monkeypatch.setattr(client, "send_command", lambda *a, **k: commands.append(1) or send(*a, **k))
     cast_columns(df)
     assert len(commands) <= 300, len(commands)
+
+
+def test_scoped_conf_restores_set_and_unset_keys(spark):
+    """``scoped_conf`` sets its keys inside the block; afterwards a key the
+    session had set gets its value back and an unset key is unset again,
+    also when the block raises."""
+    from datapipeline_omnichanneltobigquery_spark.session import scoped_conf
+
+    key, tz = "spark.sql.files.maxRecordsPerFile", "spark.sql.session.timeZone"
+    before = spark.conf.get(tz)
+    assert spark.conf.get(key, None) is None
+    with scoped_conf(spark, {key: "7", tz: "America/Los_Angeles"}):
+        assert spark.conf.get(key) == "7"
+        assert spark.conf.get(tz) == "America/Los_Angeles"
+    assert spark.conf.get(key, None) is None
+    assert spark.conf.get(tz) == before
+
+    with pytest.raises(RuntimeError, match="body failed"):
+        with scoped_conf(spark, {key: "7", tz: "America/Los_Angeles"}):
+            raise RuntimeError("body failed")
+    assert spark.conf.get(key, None) is None
+    assert spark.conf.get(tz) == before

@@ -3,6 +3,10 @@ BigQueryManager surface, omnichannel_to_bq.py:125-201)."""
 
 from __future__ import annotations
 
+import pyspark.sql.functions as F
+import pytest
+
+from datapipeline_omnichanneltobigquery_spark.sinks import catalog
 from datapipeline_omnichanneltobigquery_spark.sinks.catalog import (
     drop_table,
     list_tables,
@@ -12,6 +16,8 @@ from datapipeline_omnichanneltobigquery_spark.sinks.catalog import (
     table_columns,
     upsert_into_table,
 )
+
+OPEN_COST = "spark.sql.files.openCostInBytes"
 
 
 def test_overwrite_and_count(spark):
@@ -51,6 +57,66 @@ def test_swap_table_no_loss_window(spark):
     tables = list_tables(spark)
     assert "t_swap__backup" not in tables and "t_swap__in" not in tables
     drop_table(spark, "t_swap")
+
+
+def test_swap_table_refuses_a_partitioned_table(spark):
+    """Renaming a partitioned table leaves its partitions' locations at the
+    old path, so a swapped-in partitioned table would read no rows and the
+    backup's drop would delete its data: the swap refuses before renaming."""
+    rows = spark.range(60).select("id", (F.col("id") % 3).cast("string").alias("day"))
+    overwrite_table(rows, "t_pswap", partition_by=["day"])
+    overwrite_table(rows.withColumn("id", F.col("id") + 100), "t_pswap__in", partition_by=["day"])
+    with pytest.raises(ValueError, match="t_pswap__in"):
+        swap_table(spark, "t_pswap", "t_pswap__in")
+    assert spark.table("t_pswap").agg(F.max("id")).first()[0] == 59
+    assert spark.table("t_pswap__in").count() == 60
+    assert "t_pswap__backup" not in list_tables(spark)
+    drop_table(spark, "t_pswap")
+    drop_table(spark, "t_pswap__in")
+
+
+def test_merges_keep_main_split_across_cores(spark):
+    """The merge splits main's scan by bytes, so the increment's tiny files
+    cannot pack main's files together: after repeated merges main's rows
+    stay spread over its part files instead of collapsing into one, and
+    the merged count stays exact."""
+    main = spark.range(0, 80000, 2, numPartitions=4).select(
+        "id", F.concat(F.lit("v1-"), F.col("id").cast("string")).alias("v")
+    )
+    overwrite_table(main, "t_layout")
+    # even ids hit main across its key range, odd ids are new
+    inc = spark.range(0, 400, 1, numPartitions=4).select(
+        (F.col("id") * 200 + F.col("id") % 2).alias("id"), F.lit("v2").alias("v")
+    )
+    for _ in range(3):
+        assert upsert_into_table(spark, inc, "t_layout") == 40200
+        per_file = [
+            r["count"]
+            for r in spark.table("t_layout").groupBy("_metadata.file_path").count().collect()
+        ]
+        assert sum(per_file) == 40200
+        assert max(per_file) <= 40200 / 3, sorted(per_file)
+    drop_table(spark, "t_layout")
+
+
+def test_merge_restores_open_cost(spark, monkeypatch):
+    """The merge's scan setting reads the same after a merge, and after a
+    merge whose write raises, as before it."""
+    before = spark.conf.get(OPEN_COST)
+    overwrite_table(spark.createDataFrame([(1, "a")], "id long, v string"), "t_cost")
+    upsert_into_table(spark, spark.createDataFrame([(2, "b")], "id long, v string"), "t_cost")
+    assert spark.conf.get(OPEN_COST) == before
+
+    def failing_write(df, name, partition_by=None):
+        assert spark.conf.get(OPEN_COST) == "0"
+        raise RuntimeError("write failed")
+
+    monkeypatch.setattr(catalog, "overwrite_table", failing_write)
+    with pytest.raises(RuntimeError, match="write failed"):
+        upsert_into_table(spark, spark.createDataFrame([(3, "c")], "id long, v string"), "t_cost")
+    assert spark.conf.get(OPEN_COST) == before
+    assert row_count(spark, "t_cost") == 2
+    drop_table(spark, "t_cost")
 
 
 def test_drop_missing_ok(spark):

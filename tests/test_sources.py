@@ -225,7 +225,9 @@ def test_footer_stats_pushes_aggregate_to_parquet_metadata(spark):
     carries PushedAggregation, and the values equal a real scan's."""
     import pyspark.sql.functions as F2
 
+    from datapipeline_omnichanneltobigquery_spark.session import scoped_conf
     from datapipeline_omnichanneltobigquery_spark.sources.tables import (
+        AGGREGATE_PUSHDOWN,
         _footer_stats_df,
         footer_stats,
     )
@@ -250,18 +252,13 @@ def test_footer_stats_pushes_aggregate_to_parquet_metadata(spark):
     )
     assert got == ref_row and got["n_rows"] > 0
 
-    spark.conf.set("spark.sql.sources.useV1SourceList", "")
-    spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-    try:
+    with scoped_conf(spark, AGGREGATE_PUSHDOWN):
         plan = (
             _footer_stats_df(spark, path, ["l_quantity"])
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
         )
-    finally:
-        spark.conf.unset("spark.sql.sources.useV1SourceList")
-        spark.conf.unset("spark.sql.parquet.aggregatePushdown")
     assert "PushedAggregation: [COUNT(*), MIN(l_quantity), MAX(l_quantity)]" in plan, plan
 
 

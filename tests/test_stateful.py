@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import pytest
 
-from datapipeline_omnichanneltobigquery_spark.session import ROCKSDB_STATE_STORE
+from datapipeline_omnichanneltobigquery_spark.session import ROCKSDB_STATE_STORE, scoped_conf
 from datapipeline_omnichanneltobigquery_spark.sources.tables import read_table
 from datapipeline_omnichanneltobigquery_spark.streaming.stateful import (
     batch_user_stats,
@@ -32,10 +32,7 @@ def test_stateful_stream_matches_batch(spark, tmp_path, provider):
 
     # The provider is a session-level SQL conf, pinned per-query at start()
     # from the session value — flip it for this query only, restore after.
-    before = spark.conf.get(_PROVIDER_CONF, None)
-    if provider != "default":
-        spark.conf.set(_PROVIDER_CONF, provider)
-    try:
+    with scoped_conf(spark, {} if provider == "default" else {_PROVIDER_CONF: provider}):
         stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
         q = (
             running_user_stats(stream)
@@ -48,12 +45,6 @@ def test_stateful_stream_matches_batch(spark, tmp_path, provider):
         )
         q.awaitTermination(120)
         rows = spark.table(q.name).collect()
-    finally:
-        if provider != "default":
-            if before is None:
-                spark.conf.unset(_PROVIDER_CONF)
-            else:
-                spark.conf.set(_PROVIDER_CONF, before)
     # update mode emits one row per user per batch; the LAST row per user is
     # the final state — with availableNow and one source batch there is one
     final = {}
@@ -86,9 +77,7 @@ def test_transform_with_state_matches_batch(spark, tmp_path):
         for r in batch_user_stats(spark.read.parquet(src)).collect()
     }
 
-    before = spark.conf.get(_PROVIDER_CONF, None)
-    spark.conf.set(_PROVIDER_CONF, ROCKSDB_STATE_STORE)
-    try:
+    with scoped_conf(spark, {_PROVIDER_CONF: ROCKSDB_STATE_STORE}):
         stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
         q = (
             running_user_stats_tws(stream)
@@ -101,11 +90,6 @@ def test_transform_with_state_matches_batch(spark, tmp_path):
         )
         q.awaitTermination(120)
         rows = spark.table("t_state_tws").collect()
-    finally:
-        if before is None:
-            spark.conf.unset(_PROVIDER_CONF)
-        else:
-            spark.conf.set(_PROVIDER_CONF, before)
     final = {}
     for r in rows:
         final[r.user_id] = (r.user_id, r.n_events, round(r.sum_value, 6))

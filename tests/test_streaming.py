@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+from datapipeline_omnichanneltobigquery_spark.session import scoped_conf
 from datapipeline_omnichanneltobigquery_spark.sources.tables import read_table
 from datapipeline_omnichanneltobigquery_spark.streaming.windows import (
     sessionize,
@@ -764,9 +765,7 @@ def test_streaming_rate_cap_sorts_across_arrow_chunks(spark, tmp_path):
     src = str(tmp_path / "chunk_src")
     schema = "event_id long, user_id long, ts timestamp"
     spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "4")
-    try:
+    with scoped_conf(spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": "4"}):
         stream = spark.readStream.schema(schema).parquet(src)
         sdf = streaming_rate_cap(stream, 86400, 3)
         q = (
@@ -784,11 +783,6 @@ def test_streaming_rate_cap_sorts_across_arrow_chunks(spark, tmp_path):
         }
         # earliest three timestamps are event_ids 39, 38, 37
         assert got == {(39, 1), (38, 2), (37, 3)}
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
-        else:
-            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
 
 def test_streaming_cusum_matches_batch_on_ordered_replay(spark, tmp_path):
@@ -822,9 +816,7 @@ def test_streaming_cusum_matches_batch_on_ordered_replay(spark, tmp_path):
             ref=100.0, slack=20.0, threshold=150.0,
         ).collect()
     }
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "500")
-    try:
+    with scoped_conf(spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": "500"}):
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
@@ -847,11 +839,6 @@ def test_streaming_cusum_matches_batch_on_ordered_replay(spark, tmp_path):
             r.event_id: (r.cusum_pos, r.cusum_neg, r.is_change)
             for r in spark.table("t_cusum").collect()
         }
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
-        else:
-            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     assert streamed == batch and len(batch) > 0
     # the detector is non-trivial on this data: both flag values occur
     flags = {v[2] for v in batch.values()}
@@ -918,9 +905,7 @@ def test_streaming_sessionize_matches_batch_on_ordered_replay(spark, tmp_path):
         (str(r.user_id), r.event_id): r.session_seq
         for r in sessionize(spark.read.parquet(src), gap_seconds=1800).collect()
     }
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "500")
-    try:
+    with scoped_conf(spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": "500"}):
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
@@ -940,11 +925,6 @@ def test_streaming_sessionize_matches_batch_on_ordered_replay(spark, tmp_path):
             (r.user_id, r.event_id): r.session_seq
             for r in spark.table("t_sessionize").collect()
         }
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
-        else:
-            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     assert streamed == batch
     assert max(streamed.values()) > 1  # gap structure exercised, not one session
 
@@ -985,9 +965,7 @@ def test_streaming_weighted_reservoir_matches_batch(spark, tmp_path):
         ]
         for s in sources
     }
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "100")
-    try:
+    with scoped_conf(spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": "100"}):
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
@@ -1006,11 +984,6 @@ def test_streaming_weighted_reservoir_matches_batch(spark, tmp_path):
         )
         q.awaitTermination(180)
         out = spark.table("t_reservoir").collect()
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
-        else:
-            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     # the FINAL snapshot per key (max ver) is the converged reservoir
     last_ver = {}
     for r in out:
@@ -1076,9 +1049,7 @@ def test_streaming_transitions_match_batch_on_ordered_replay(spark, tmp_path):
             expected[(cur, nxt)] = expected.get((cur, nxt), 0) + 1
             cur = nxt
 
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "500")
-    try:
+    with scoped_conf(spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": "500"}):
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
@@ -1098,11 +1069,6 @@ def test_streaming_transitions_match_batch_on_ordered_replay(spark, tmp_path):
         for r in spark.table("t_transitions").collect():
             k = (r.from_state, r.to_state)
             got[k] = got.get(k, 0) + r.cnt
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
-        else:
-            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     assert got == expected
     assert sum(v for (f, t), v in got.items() if t == CONV) > 0  # conversions seen
 
@@ -1139,9 +1105,7 @@ def test_streaming_lateness_matches_batch_on_ordered_replay(spark, tmp_path):
     spark.createDataFrame(rows[:half], schema).coalesce(1).write.parquet(f"{src}/b=0")
     spark.createDataFrame(rows[half:], schema).coalesce(1).write.parquet(f"{src}/b=1")
 
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "200")
-    try:
+    with scoped_conf(spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": "200"}):
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
@@ -1163,10 +1127,5 @@ def test_streaming_lateness_matches_batch_on_ordered_replay(spark, tmp_path):
             acc[0] += r.n_rows
             acc[1] += r.n_late
             acc[2] = max(acc[2], r.max_lag_us)
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
-        else:
-            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     assert {k: tuple(v) for k, v in got.items()} == want
     assert sum(v[1] for v in got.values()) > 0  # the scenario produces late rows
