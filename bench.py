@@ -356,43 +356,50 @@ def cmd_time(args: list[str]) -> int:
     return 0
 
 
-def audit_row(spark: SparkSession, name: str) -> tuple:
-    """One PLANS.md row: the plan facts that decide 100 TB behavior."""
-    df = build(spark, name)
-    plan = audit.plan_string(df)
-    n_hints, n_flagged = audit.broadcast_hint_audit(df)
+def plans_row(name: str, facts: audit.PlanFacts, codegen_stages: int | str) -> str:
+    """One PLANS.md / PLANS_EXTRAS.md table row.  ``codegen_stages`` comes
+    from ``audit.codegen_stage_count_of``, a separate AQE-off rebuild."""
+    n_hints, n_flagged = facts.hints
     if n_hints == 0:
         hint_col = "-"
     elif n_flagged == 0:
         hint_col = f"all {n_hints}"
     else:
         hint_col = f"REVIEW {n_flagged}/{n_hints}"
-    n_final, n_partial = audit.partial_agg_audit(df)
+    n_final, n_partial = facts.partial_agg
     if n_final == 0 and n_partial == 0:
         pagg_col = "-"
     elif n_partial == 0:
         pagg_col = "MISSING"
     else:
         pagg_col = f"{n_partial}p/{n_final}f"
-    scans = audit.file_scan_counts(df)
+    scans = facts.file_scans
     max_scans = max(scans.values()) if scans else 0
     if max_scans > audit.MAX_FILE_SCANS_PER_SOURCE:
         scan_col = f"REVIEW {max_scans}x {max(scans, key=scans.get)}"
     else:
         scan_col = str(max_scans)
-    return (
+    cells = (
         name,
-        audit.exchange_count(df),
-        plan.count("BroadcastHashJoin"),
-        plan.count("SortMergeJoin"),
-        # AQE hides codegen stars pre-execution: count them with AQE off
-        audit.codegen_stage_count_of(lambda s: build(s, name), spark),
-        "yes" if any(e.strip() for e in audit.pushed_filters(df)) else "-",
+        facts.exchanges,
+        facts.broadcast_joins,
+        facts.sort_merge_joins,
+        codegen_stages,
+        "yes" if facts.pushed_filter else "-",
         hint_col,
         pagg_col,
         scan_col,
-        audit.reused_exchange_count(df) or "-",
+        facts.reused_exchanges or "-",
     )
+    return "| " + " | ".join(str(c) for c in cells) + " |"
+
+
+def audit_row(spark: SparkSession, name: str) -> str:
+    """One PLANS.md row: the plan facts that decide 100 TB behavior."""
+    facts = audit.plan_facts(build(spark, name))
+    # AQE hides codegen stars pre-execution: count them with AQE off
+    codegen = audit.codegen_stage_count_of(lambda s: build(s, name), spark)
+    return plans_row(name, facts, codegen)
 
 
 def cmd_plans(args: list[str]) -> int:
@@ -427,7 +434,7 @@ def cmd_plans(args: list[str]) -> int:
         try:
             rows.append(audit_row(spark, name))
         except Exception as exc:  # one broken query must not hide the table
-            rows.append((name, "ERR", "-", "-", "-", str(exc)[:40], "-", "-", "-", "-"))
+            rows.append(f"| {name} | ERR | - | - | - | {str(exc)[:40]} | - | - | - | - |")
     cmd = f"SPARK_GRAFT_CPUS={CPUS} SPARK_GRAFT_SF_DIR={SF_DIR} python bench.py plans"
     lines = [
         (
@@ -446,7 +453,8 @@ def cmd_plans(args: list[str]) -> int:
         "audit.broadcast_hint_audit; `REVIEW n/m` = n of m hints force-broadcast",
         "an input that scales with the data, each of which must be justified in",
         "tests/test_plans.py's allowlist).  `tests/test_plans.py` asserts the",
-        "load-bearing subset; this table makes every query's shape reviewable.",
+        "load-bearing subset, and checks every row here against the live plans",
+        "in every column but `codegen stages`: rerun this after a plan change.",
         "",
         "`max scans/src` = the most times the compiled plan scans any ONE file",
         "source (audit.file_scan_counts) — the redundant-subtree detector: a",
@@ -468,7 +476,7 @@ def cmd_plans(args: list[str]) -> int:
         "| query | shuffles | bcast joins | SMJ | codegen stages | pushed filter | bcast inputs bounded? | partial agg | max scans/src | reused exch |",
         "|---|---|---|---|---|---|---|---|---|---|",
     ]
-    lines += ["| " + " | ".join(str(x) for x in r) + " |" for r in rows]
+    lines += rows
     out = os.path.join(ROOT, "PLANS_EXTRAS.md" if extras else "PLANS.md")
     with open(out, "w") as fh:
         fh.write("\n".join(lines) + "\n")

@@ -51,6 +51,9 @@ EOW = "</w>"
 #: selection) or an off-cluster trainer over the extracted word-frequency
 #: table, so it is refused loudly rather than run silently.
 BPE_MAX_MERGES = 4096
+#: merge rounds between localCheckpoints of the evolving segmentation, so
+#: the plan's nested merge expressions stay a bounded depth
+BPE_CHECKPOINT_EVERY = 8
 
 
 def _word_freqs(df: DataFrame, text_col: str) -> DataFrame:
@@ -111,7 +114,6 @@ def bpe_train(
     text_col: str,
     n_merges: int = 50,
     min_pair_freq: int = 2,
-    checkpoint_every: int = 8,
 ) -> list[tuple[str, str]]:
     """Learn ``n_merges`` BPE merge rules from the corpus; returns the
     ordered merge list (the tokenizer artifact to persist).  Stops early
@@ -146,20 +148,18 @@ def bpe_train(
         a, b = top[0]["a"], top[0]["b"]
         merges.append((a, b))
         vocab = vocab.withColumn("seg", _merge_expr("seg", a, b))
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
+        if (i + 1) % BPE_CHECKPOINT_EVERY == 0:
             vocab = vocab.localCheckpoint()
     return merges
 
 
-def bpe_segment_words(
-    words: DataFrame, merges: list[tuple[str, str]], checkpoint_every: int = 8
-) -> DataFrame:
+def bpe_segment_words(words: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """Apply an ordered merge list to a (w) frame of distinct words →
     (w, tokens array<string>)."""
     seg = words.select("w", _initial_seg("w").alias("seg"))
     for i, (a, b) in enumerate(merges):
         seg = seg.withColumn("seg", _merge_expr("seg", a, b))
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
+        if (i + 1) % BPE_CHECKPOINT_EVERY == 0:
             seg = seg.localCheckpoint()
     return seg.select("w", F.col("seg").alias("tokens"))
 

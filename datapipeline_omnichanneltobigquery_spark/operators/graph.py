@@ -28,6 +28,7 @@ from datapipeline_omnichanneltobigquery_spark.operators.normalize import observe
 
 SCALE = 10**12  # fixed-point denominator
 DAMP_NUM, DAMP_DEN = 85, 100  # damping 0.85 as an integer ratio
+PAGERANK_CHECKPOINT_EVERY = 4  # rounds between localCheckpoints of the ranks
 
 
 def basket_edges(
@@ -75,9 +76,7 @@ def basket_edges(
     return a.join(b, "k").filter(F.col("src") != F.col("dst")).select("src", "dst")
 
 
-def pagerank_fixedpoint(
-    edges: DataFrame, iterations: int = 3, checkpoint_every: int = 4
-) -> DataFrame:
+def pagerank_fixedpoint(edges: DataFrame, iterations: int = 3) -> DataFrame:
     """PageRank over directed ``edges`` (src, dst) — ``iterations`` exact
     fixed-point rounds from a uniform start.  Returns (node, rank) with
     rank in units of 1/SCALE.  Nodes are the union of srcs and dsts;
@@ -85,8 +84,8 @@ def pagerank_fixedpoint(
     mass decays into the teleport term, the standard simplification.
     An empty edge set returns an empty (node, rank) frame instead of
     dividing by n = 0.  The evolving ``ranks`` state is localCheckpointed
-    every ``checkpoint_every`` rounds so plan depth (and Catalyst analysis
-    cost) stays bounded at high iteration counts — the same discipline as
+    every ``PAGERANK_CHECKPOINT_EVERY`` rounds so plan depth (and Catalyst
+    analysis cost) stays bounded at high iteration counts — the same discipline as
     ``connected_components_star``."""
     e = edges.select("src", "dst").distinct().localCheckpoint()
     nodes = (
@@ -116,7 +115,7 @@ def pagerank_fixedpoint(
             "node",
             (F.lit(base) + F.coalesce(F.col("s"), F.lit(0))).cast("bigint").alias("r"),
         )
-        if checkpoint_every and (it + 1) % checkpoint_every == 0 and it + 1 < iterations:
+        if (it + 1) % PAGERANK_CHECKPOINT_EVERY == 0 and it + 1 < iterations:
             ranks = ranks.localCheckpoint()
     return ranks.select("node", F.col("r").alias("rank"))
 

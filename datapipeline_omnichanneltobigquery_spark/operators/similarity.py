@@ -83,53 +83,6 @@ def cosine_topk_sql(table: str, query_vec_id: int, k: int, dim: int) -> str:
     """
 
 
-def cosine_pairs(
-    embeddings: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-    use_arrow_kernel: bool = True,
-    n_blocks: int = 8,
-) -> DataFrame:
-    """All-pairs cosine ≥ threshold (embedding near-dup detection).
-    Returns (id_a, id_b, cos_sim), id_a < id_b.  Exact.
-
-    Default path: block-tiled Arrow/numpy kernels — vectors hash into
-    ``n_blocks`` blocks by id, the B·(B+1)/2 block-pair tiles are enumerated
-    as data, and each tile's pair grid is scored by one applyInPandas task.
-    Fully distributed: NO driver collect, no full-corpus broadcast; each
-    task holds two blocks (~2n/B vectors), so memory per task is tuned by
-    ``n_blocks`` — at 10⁶ vectors pick B ≈ n/50k and the quadratic work
-    spreads over B² tasks.  The kernel accumulates dimension-by-dimension in
-    index order (``acc += A[:,i]·B[:,i]`` from 0.0; 0.0+p == p in IEEE), the
-    exact left-fold of the expression/oracle form, so results are
-    bitwise-identical to the pure-DataFrame path and the DuckDB oracle — at
-    BLAS-class speed (measured ~50× over the codegen chain at sf0.1).
-
-    ``use_arrow_kernel=False`` keeps everything in Catalyst expressions:
-    pre-normalize once (O(n) norms), then one unrolled dot per pair.
-    """
-    if use_arrow_kernel:
-        return _cosine_pairs_blocked(embeddings, threshold, id_col, vec_col, n_blocks)
-    unit = embeddings.select(
-        F.col(id_col), norm_unit(vec_col, dim).alias("__u")
-    )
-    # Materialization barrier: without it Catalyst collapses the normalize
-    # projection into the per-pair dot terms and re-evaluates the transform
-    # lambda once per element per PAIR (measured 7× slower at sf0.1).  The
-    # exchange forces the unit vectors to exist as data before the join.
-    n_part = int(embeddings.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    unit = unit.repartition(n_part)
-    a = unit.select(F.col(id_col).alias("id_a"), F.col("__u").alias("ua"))
-    b = unit.select(F.col(id_col).alias("id_b"), F.col("__u").alias("ub"))
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", dot("ua", "ub", dim).alias("cos_sim"))
-        .filter(F.col("cos_sim") >= threshold)
-    )
-
-
 def _unit_rows(ids, vecs):
     """(ids, unit-matrix float64) with the fold-exact norm: per-dimension
     accumulation in index order, matching the expression/oracle fold."""
@@ -142,14 +95,28 @@ def _unit_rows(ids, vecs):
     return np.asarray(ids, dtype=np.int64), a / np.sqrt(acc)[:, None]
 
 
-def _cosine_pairs_blocked(
-    embeddings: DataFrame, threshold: float, id_col: str, vec_col: str, n_blocks: int
+def cosine_pairs(
+    embeddings: DataFrame,
+    threshold: float,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    n_blocks: int = 8,
 ) -> DataFrame:
-    """Block-tiled exact all-pairs: vector v (block b = pmod(id, B)) is
-    routed to every tile (bi ≤ bj) that involves b, tiles become groups, and
-    one numpy kernel scores each tile's cross grid.  Pair (x, y) lives in
-    exactly one tile — (block(x), block(y)) sorted — so the union over tiles
-    is the exact pair set, no dedup pass needed.
+    """All-pairs cosine ≥ threshold (embedding near-dup detection).
+    Returns (id_a, id_b, cos_sim), id_a < id_b.  Exact.
+
+    Block-tiled Arrow/numpy kernels — vectors hash into ``n_blocks`` blocks
+    by id (block b = pmod(id, B)), and a vector is routed to every tile
+    (bi ≤ bj) that involves its block.  Tiles become groups, and one numpy
+    kernel (an applyInPandas task) scores each tile's cross grid.  Pair
+    (x, y) lives in exactly one tile — (block(x), block(y)) sorted — so the
+    union over tiles is the exact pair set, no dedup pass needed.  Fully
+    distributed: NO driver collect, no full-corpus broadcast.  The kernel
+    accumulates dimension-by-dimension in index order (``acc += A[:,i]·B[:,i]``
+    from 0.0; 0.0+p == p in IEEE), the exact left-fold of the
+    expression/oracle form, so results are bitwise-identical to the DuckDB
+    oracle — at BLAS-class speed (measured ~50× over the codegen chain at
+    sf0.1).
 
     Plan: broadcast-join the B(B+1)/2-row tile table onto the scan (one
     narrow Expand-like fanout of ~B rows per vector), one shuffle on
@@ -230,7 +197,9 @@ def cosine_pairs_sql(table: str, threshold: float, dim: int) -> str:
 
 
 def _unit_df(embeddings: DataFrame, id_col: str, vec_col: str, dim: int | None) -> DataFrame:
-    """(id, unit vector) with a materialization barrier (see cosine_pairs)."""
+    """(id, unit vector) with a materialization barrier: without the
+    exchange Catalyst collapses the normalize projection into each
+    downstream dot term and re-evaluates it per pair (7× slower at sf0.1)."""
     n_part = int(embeddings.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     return embeddings.select(
         F.col(id_col), norm_unit(vec_col, dim).alias("__u")
@@ -2038,7 +2007,6 @@ def sim_histogram(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_bins: int = 40,
-    dim: int | None = None,
     max_sample: int = SIM_HIST_MAX_SAMPLE,
 ) -> DataFrame:
     """Histogram of ALL pairwise cosine similarities of (a sample of) the
@@ -2079,9 +2047,7 @@ def sim_histogram(
             "the all-pairs grid is n² — tighten the sample predicate or raise "
             "the cap deliberately"
         )
-    pairs = cosine_pairs(
-        sampled, threshold=-2.0, id_col=id_col, vec_col=vec_col, dim=dim
-    )
+    pairs = cosine_pairs(sampled, threshold=-2.0, id_col=id_col, vec_col=vec_col)
     # clamped BOTH ends: float normalization leaves ||u|| = 1±ε, so a
     # near-antipodal dot can land marginally below −1.0 — without the
     # GREATEST it would bin to −1 and silently vanish from the grid join

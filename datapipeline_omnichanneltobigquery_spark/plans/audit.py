@@ -4,8 +4,11 @@ discipline, made assertable.
 These inspect the formatted plan for the properties that matter at 100 TB:
 filters reaching the parquet scan (PushedFilters), projections pruning the
 scan (ReadSchema), dimension joins broadcasting, codegen coverage, and
-shuffle (Exchange) counts.  tests/test_plans.py pins them for the flagship
-queries so a regression in plan shape fails CI, not a cluster bill.
+shuffle (Exchange) counts.  :func:`plan_facts` reads one DataFrame's plans
+once and returns every per-entry fact; tests/test_plans.py audits the whole
+registry (gated queries and extras) with it, and ``bench.py plans`` renders
+the same facts into PLANS.md / PLANS_EXTRAS.md, so a regression in plan
+shape fails CI, not a cluster bill.
 """
 
 from __future__ import annotations
@@ -13,8 +16,10 @@ from __future__ import annotations
 import contextlib
 import io
 import re
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import ArrayType, MapType, StructType
 
 from datapipeline_omnichanneltobigquery_spark.session import scoped_conf
 
@@ -26,13 +31,13 @@ def plan_string(df: DataFrame, mode: str = "formatted") -> str:
     return buf.getvalue()
 
 
-def pushed_filters(df: DataFrame) -> list[str]:
-    """All PushedFilters entries across the plan's scans."""
-    return re.findall(r"PushedFilters: \[([^\]]*)\]", plan_string(df))
+def _pushed_filters(plan: str) -> list[str]:
+    """All PushedFilters entries across a formatted plan's scans."""
+    return re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
 
 
 def has_pushed_filter(df: DataFrame, column: str) -> bool:
-    return any(column in entry for entry in pushed_filters(df))
+    return any(column in entry for entry in _pushed_filters(plan_string(df)))
 
 
 def read_schemas(df: DataFrame) -> list[str]:
@@ -48,13 +53,16 @@ def sort_merge_join_count(df: DataFrame) -> int:
     return plan_string(df).count("SortMergeJoin")
 
 
-def exchange_count(df: DataFrame) -> int:
+def _shuffle_exchanges(plan: str) -> int:
     """Number of shuffle exchanges (excludes broadcast exchanges).
 
     Matches both the pre-AQE detail form ('Exchange hashpartitioning(...)')
     and the AQE formatted tree form ('Exchange (5)')."""
-    s = plan_string(df)
-    return len(re.findall(r"(?<!Broadcast)Exchange (?:hash|range|\()", s))
+    return len(re.findall(r"(?<!Broadcast)Exchange (?:hash|range|\()", plan))
+
+
+def exchange_count(df: DataFrame) -> int:
+    return _shuffle_exchanges(plan_string(df))
 
 
 #: per-source scan ceiling for a single compiled plan — above this, a query
@@ -64,8 +72,8 @@ def exchange_count(df: DataFrame) -> int:
 MAX_FILE_SCANS_PER_SOURCE = 4
 
 
-def file_scan_counts(df: DataFrame) -> dict[str, int]:
-    """How many times the compiled plan scans each file source (keyed by
+def file_scan_counts(plan: str) -> dict[str, int]:
+    """How many times a formatted plan scans each file source (keyed by
     the location's basename, e.g. ``documents.parquet``).
 
     THE 100 TB redundancy detector: a subtree referenced N ways without a
@@ -73,8 +81,8 @@ def file_scan_counts(df: DataFrame) -> dict[str, int]:
     and invisible at local scale, but N corpus scans (and N tokenizations)
     for one job at 100× (the round-7 ``text_tfidf_pairs`` finding: 18
     scans, zero ReusedExchange).  tests/test_plans.py asserts a ceiling
-    per source for every gated query."""
-    locs = re.findall(r"Location: \S+ \[([^\]]*)\]", plan_string(df))
+    per source for every registry entry, gated and extra."""
+    locs = re.findall(r"Location: \S+ \[([^\]]*)\]", plan)
     out: dict[str, int] = {}
     for loc in locs:
         for path in loc.split(","):
@@ -82,12 +90,6 @@ def file_scan_counts(df: DataFrame) -> dict[str, int]:
             if base:
                 out[base] = out.get(base, 0) + 1
     return out
-
-
-def reused_exchange_count(df: DataFrame) -> int:
-    """ReusedExchange nodes — Catalyst sharing an identical shuffle
-    subtree instead of recomputing it."""
-    return plan_string(df).count("ReusedExchange")
 
 
 def codegen_stage_count_of(build, spark) -> int:
@@ -132,8 +134,9 @@ def _hint_subtrees(analyzed: str) -> list[str]:
 _FIXED_DIM_FIRST_COLS = ("n_nationkey", "r_regionkey", "cid", "cv")
 
 
-def broadcast_hint_audit(df: DataFrame) -> tuple[int, int]:
-    """(n broadcast hints, n NOT provably bounded) for a DataFrame's plan.
+def broadcast_hint_audit(analyzed: str) -> tuple[int, int]:
+    """(n broadcast hints, n NOT provably bounded) in an analyzed-plan tree
+    string.
 
     A forced broadcast is only safe when its input's cardinality is bounded
     by CONSTRUCTION, not by today's data size — at 100× a "small" side
@@ -153,7 +156,6 @@ def broadcast_hint_audit(df: DataFrame) -> tuple[int, int]:
     eval suite) legitimately carry hints — but every flag must appear in
     tests/test_plans.py's justification allowlist, so a new unbounded
     broadcast fails CI instead of an executor."""
-    analyzed = df._jdf.queryExecution().analyzed().toString()
     n = flagged = 0
     for sub in _hint_subtrees(analyzed):
         head, _, body = sub.partition("\n")
@@ -224,12 +226,6 @@ def _subtree_bounded(body: str) -> bool:
     return ok
 
 
-def uses_python_eval(df: DataFrame) -> bool:
-    """True if the plan contains a row-at-a-time Python UDF eval (BatchEvalPython);
-    ArrowEvalPython / mapInPandas stages are the sanctioned Python path."""
-    return "BatchEvalPython" in plan_string(df)
-
-
 # ---------------------------------------------------------------------------
 # Partial-aggregation audit (map-side combine evidence)
 # ---------------------------------------------------------------------------
@@ -239,16 +235,16 @@ _AGG_LINE_RE = re.compile(
 )
 
 
-def partial_agg_audit(df: DataFrame) -> tuple[int, int]:
-    """(n final grouped aggregates, n partial/merge stages) in the physical
-    plan — the mechanical form of the 'every shuffled aggregate combines
+def partial_agg_audit(simple: str) -> tuple[int, int]:
+    """(n final grouped aggregates, n partial/merge stages) in a simple-mode
+    physical plan — the mechanical form of the 'every shuffled aggregate combines
     map-side' claim.  A GROUPED final aggregate (non-empty keys, non-empty
     non-partial functions) without any partial stage in the plan means the
     full pre-aggregation row stream crosses the exchange — the shape that
     melts at 100 TB.  tests/test_plans.py asserts partial >= final for
     every gated query; PLANS.md carries the counts."""
     final = partial = 0
-    for m in _AGG_LINE_RE.finditer(plan_string(df, mode="simple")):
+    for m in _AGG_LINE_RE.finditer(simple):
         keys, fns = m.group(1).strip(), m.group(2).strip()
         if not fns:
             # distinct-style dedup node (functions=[]) — keys-only partial
@@ -260,3 +256,46 @@ def partial_agg_audit(df: DataFrame) -> tuple[int, int]:
         elif keys:
             final += 1
     return final, partial
+
+
+# ---------------------------------------------------------------------------
+# One pass over an entry's plans
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class PlanFacts:
+    """Every per-entry plan fact the registry-wide audits and PLANS*.md use."""
+
+    exchanges: int  # shuffle exchanges, broadcast exchanges excluded
+    broadcast_joins: int
+    sort_merge_joins: int
+    pushed_filter: bool  # any scan carries a non-empty PushedFilters
+    hints: tuple[int, int]  # broadcast_hint_audit's (n, flagged)
+    partial_agg: tuple[int, int]  # partial_agg_audit's (final, partial)
+    file_scans: dict[str, int]  # file_scan_counts
+    reused_exchanges: int
+    python_eval: bool  # BatchEvalPython: row-at-a-time, not Arrow, Python
+    complex_columns: tuple[str, ...]  # array/map/struct output columns
+
+
+def plan_facts(df: DataFrame) -> PlanFacts:
+    """Read ``df``'s formatted, simple and analyzed plans once each."""
+    plan = plan_string(df)
+    return PlanFacts(
+        exchanges=_shuffle_exchanges(plan),
+        broadcast_joins=plan.count("BroadcastHashJoin"),
+        sort_merge_joins=plan.count("SortMergeJoin"),
+        pushed_filter=any(e.strip() for e in _pushed_filters(plan)),
+        hints=broadcast_hint_audit(df._jdf.queryExecution().analyzed().toString()),
+        partial_agg=partial_agg_audit(plan_string(df, mode="simple")),
+        file_scans=file_scan_counts(plan),
+        reused_exchanges=plan.count("ReusedExchange"),
+        python_eval="BatchEvalPython" in plan,
+        complex_columns=tuple(
+            f.name
+            for f in df.schema.fields
+            if isinstance(f.dataType, (ArrayType, MapType, StructType))
+        ),
+    )
+

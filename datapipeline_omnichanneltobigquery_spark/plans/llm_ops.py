@@ -152,7 +152,7 @@ def similarity_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def similarity_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup pairs (cosine ≥ 0.35), exact all-pairs baseline."""
-    return sim.cosine_pairs(read_table(spark, sf_dir, "embeddings"), threshold=0.35, dim=EMB_DIM)
+    return sim.cosine_pairs(read_table(spark, sf_dir, "embeddings"), threshold=0.35)
 
 
 @query(
@@ -1488,7 +1488,7 @@ def embeddings_sim_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty bins materialized so the output is always 40 rows; a loud n²
     guard caps the sample (operators/similarity.py::sim_histogram)."""
     emb = read_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 7 == 3)
-    return sim.sim_histogram(emb, n_bins=40, dim=EMB_DIM)
+    return sim.sim_histogram(emb, n_bins=40)
 
 
 _SEMDECON_TAU = 0.30

@@ -76,7 +76,10 @@ def scoped_conf(spark: SparkSession, settings: dict[str, str]):
 # local RocksDB instance (changelog-checkpointed to the checkpoint location)
 # instead of the default in-memory HDFSBackedStateStoreProvider map.  At real
 # state sizes (billions of dedup keys / session windows) the in-memory
-# provider OOMs the executors; RocksDB is the deployable setting.
+# provider OOMs the executors; RocksDB is the deployable setting.  It is a
+# session-level SQL conf: set ``spark.sql.streaming.stateStore.providerClass``
+# to it before ``start()`` (each query pins the provider it started with in
+# its checkpoint).
 ROCKSDB_STATE_STORE = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
@@ -87,20 +90,12 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     warehouse_dir: str | None = None,
-    rocksdb_state_store: bool = False,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine defaults.
 
     ``shuffle_partitions`` defaults to 2× local cores, which keeps every core
     busy through AQE coalescing; on a real cluster you would size it to
     ~2-3× total executor cores and let AQE coalesce down.
-
-    ``rocksdb_state_store=True`` switches Structured Streaming state to the
-    RocksDB provider (:data:`ROCKSDB_STATE_STORE`).  It is a session-level
-    SQL conf, so on an existing session it can also be flipped per-query via
-    ``spark.conf.set("spark.sql.streaming.stateStore.providerClass", ...)``
-    before ``start()`` — each query pins the provider it started with in its
-    checkpoint.
     """
     master = master or f"local[{DEFAULT_CPUS}]"
     builder = (
@@ -132,10 +127,6 @@ def get_spark(
         builder = builder.config(
             "spark.python.daemon.module", f"{__package__}.worker_daemon"
         ).config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
-    if rocksdb_state_store:
-        builder = builder.config(
-            "spark.sql.streaming.stateStore.providerClass", ROCKSDB_STATE_STORE
-        )
     if shuffle_partitions is not None:
         builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     if warehouse_dir is not None:

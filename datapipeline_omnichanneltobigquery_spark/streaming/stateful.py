@@ -78,7 +78,8 @@ if _HAS_TWS:
         ListState/MapState for richer operators), timers, and state
         evolution, instead of applyInPandasWithState's single opaque tuple.
         ``transformWithStateInPandas`` REQUIRES the RocksDB provider
-        (session.get_spark(rocksdb_state_store=True)) — state lives
+        (``spark.sql.streaming.stateStore.providerClass`` set to
+        session.ROCKSDB_STATE_STORE before ``start()``) — state lives
         off-heap, changelog-checkpointed, which is what survives billions
         of keys."""
 

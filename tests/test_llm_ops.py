@@ -1067,7 +1067,7 @@ def test_srp_pairs_subset_of_exact(spark):
     )
 
     emb = read_table(spark, SF_DIR, "embeddings")
-    exact = {(r.id_a, r.id_b) for r in cosine_pairs(emb, threshold=0.35, dim=64).collect()}
+    exact = {(r.id_a, r.id_b) for r in cosine_pairs(emb, threshold=0.35).collect()}
     srp = {(r.id_a, r.id_b) for r in srp_near_dup_pairs(emb, threshold=0.35, dim=64).collect()}
     assert exact, "fixture should contain near-dup pairs"
     assert srp <= exact
@@ -1181,7 +1181,7 @@ def test_srp_recall_at_moderate_similarity(spark):
     )
 
     emb = read_table(spark, SF_DIR, "embeddings")
-    exact = {(r.id_a, r.id_b) for r in cosine_pairs(emb, threshold=0.45, dim=64).collect()}
+    exact = {(r.id_a, r.id_b) for r in cosine_pairs(emb, threshold=0.45).collect()}
     if not exact:
         _pytest.skip("fixture has no pairs at cos >= 0.45")
     srp = {(r.id_a, r.id_b) for r in srp_near_dup_pairs(emb, threshold=0.45, dim=64).collect()}
@@ -2590,7 +2590,7 @@ def test_sim_histogram_hand_case_and_guard(spark):
         (4, [-1.0, 0.0]),   # cos with 1/2 = -1.0 -> bin 0; with 3 = 0.0
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = {r.bin: r.n_pairs for r in sim_histogram(df, n_bins=40, dim=2).collect()}
+    got = {r.bin: r.n_pairs for r in sim_histogram(df, n_bins=40).collect()}
     assert len(got) == 40 and sum(got.values()) == 6  # C(4,2) pairs, all bins present
     assert got[39] == 1   # the parallel pair, cos exactly 1.0
     assert got[20] == 3   # the three orthogonal pairs at cos 0.0
@@ -2601,7 +2601,7 @@ def test_sim_histogram_hand_case_and_guard(spark):
         F.col("id").alias("vec_id"), F.array(F.lit(1.0), F.lit(0.0)).alias("embedding")
     )
     with pytest.raises(ValueError, match="max_sample"):
-        sim_histogram(big, n_bins=4, dim=2, max_sample=10)
+        sim_histogram(big, n_bins=4, max_sample=10)
 
 
 def test_hits_rejects_zero_iterations(spark):

@@ -4,14 +4,46 @@ plan worse, not just different."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
+import os
 
+import pyspark.sql.functions as F
+import pytest
+
+import bench
 from datapipeline_omnichanneltobigquery_spark.plans import audit
 from datapipeline_omnichanneltobigquery_spark.plans.queries import EXTRA_QUERIES, QUERIES
 from datapipeline_omnichanneltobigquery_spark.sources.tables import read_table
 
 from tests.conftest import SF_DIR
 from tests.helpers import count_jobs
+
+
+@pytest.fixture(scope="module")
+def registry_facts(spark) -> dict:
+    """name -> audit.PlanFacts, or the exception its build raised, for
+    every gated and extra registry entry, each built once.  Facts, not
+    DataFrames, are kept, so no entry's localCheckpoint blocks stay pinned
+    while the module runs."""
+    facts: dict = {}
+    for name, fn in {**QUERIES, **EXTRA_QUERIES}.items():
+        try:
+            facts[name] = audit.plan_facts(fn(spark, SF_DIR))
+        except Exception as exc:
+            facts[name] = exc
+    return facts
+
+
+def _built(registry_facts: dict, names, build_errors_fail: bool = False):
+    """(name, facts) of each entry in ``names``.  An entry that did not
+    build is raised when ``build_errors_fail``, else skipped (build errors
+    are other tests' business)."""
+    for name in names:
+        facts = registry_facts[name]
+        if isinstance(facts, Exception):
+            if build_errors_fail:
+                raise facts
+            continue
+        yield name, facts
 
 
 def test_filter_pushdown_reaches_scan(spark):
@@ -61,11 +93,10 @@ def test_topk_avoids_global_sort(spark):
     assert audit.exchange_count(df) == 0, audit.plan_string(df)
 
 
-def test_no_row_at_a_time_python(spark):
+def test_no_row_at_a_time_python(registry_facts):
     """No BatchEvalPython anywhere: Python only via Arrow (mapInPandas)."""
-    for name, fn in QUERIES.items():
-        df = fn(spark, SF_DIR)
-        assert not audit.uses_python_eval(df), f"{name} uses row-at-a-time Python"
+    for name, facts in _built(registry_facts, QUERIES, build_errors_fail=True):
+        assert not facts.python_eval, f"{name} uses row-at-a-time Python"
 
 
 def test_codegen_everywhere(spark):
@@ -150,22 +181,16 @@ def test_bm25_broadcasts_query_side(spark):
     assert audit.broadcast_join_count(scores) >= 2, audit.plan_string(scores)
 
 
-def test_driver_outputs_have_no_complex_types(spark):
+def test_driver_outputs_have_no_complex_types(registry_facts):
     """Driver-contract guard: the driver's canonicalizer sorts pandas columns
     and crashes on array/map/struct cells (unhashable) — every EXPORTED query
     must return scalar columns only.  Round-2 regression
     (agg_collect_sorted_users) pinned forever."""
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    bad: dict[str, list[str]] = {}
-    for name, fn in QUERIES.items():
-        schema = fn(spark, SF_DIR).schema
-        complex_cols = [
-            f.name for f in schema.fields
-            if isinstance(f.dataType, (ArrayType, MapType, StructType))
-        ]
-        if complex_cols:
-            bad[name] = complex_cols
+    bad = {
+        name: list(facts.complex_columns)
+        for name, facts in _built(registry_facts, QUERIES, build_errors_fail=True)
+        if facts.complex_columns
+    }
     assert not bad, f"driver-exported queries return complex-typed columns: {bad}"
 
 
@@ -249,19 +274,13 @@ BROADCAST_REVIEW_ALLOWLIST = {
 }
 
 
-def test_no_unjustified_unbounded_broadcast_hints(spark):
+def test_no_unjustified_unbounded_broadcast_hints(registry_facts):
     """Every driver query's forced broadcasts are provably bounded
     (limit / scalar agg / point filter / inline data / fixed dim) or
     explicitly justified in BROADCAST_REVIEW_ALLOWLIST."""
-    from datapipeline_omnichanneltobigquery_spark.plans.queries import QUERIES
-
     offenders = {}
-    for name, fn in QUERIES.items():
-        try:
-            df = fn(spark, SF_DIR)
-        except Exception:
-            continue  # build errors are other tests' business
-        _, flagged = audit.broadcast_hint_audit(df)
+    for name, facts in _built(registry_facts, QUERIES):
+        _, flagged = facts.hints
         if flagged != BROADCAST_REVIEW_ALLOWLIST.get(name, 0):
             offenders[name] = flagged
     assert not offenders, offenders
@@ -320,18 +339,12 @@ EXTRA_BROADCAST_REVIEW_ALLOWLIST = {
 }
 
 
-def test_no_unjustified_unbounded_broadcast_hints_extras(spark):
+def test_no_unjustified_unbounded_broadcast_hints_extras(registry_facts):
     """The broadcast-boundedness contract extended to the whole registry:
     driver=False entries get the same audit as the gated 50."""
-    from datapipeline_omnichanneltobigquery_spark.plans.queries import EXTRA_QUERIES
-
     offenders = {}
-    for name, fn in EXTRA_QUERIES.items():
-        try:
-            df = fn(spark, SF_DIR)
-        except Exception:
-            continue  # build errors are other tests' business
-        _, flagged = audit.broadcast_hint_audit(df)
+    for name, facts in _built(registry_facts, EXTRA_QUERIES):
+        _, flagged = facts.hints
         if flagged != EXTRA_BROADCAST_REVIEW_ALLOWLIST.get(name, 0):
             offenders[name] = flagged
     assert not offenders, offenders
@@ -346,7 +359,7 @@ def test_no_unjustified_unbounded_broadcast_hints_extras(spark):
 FILE_SCAN_ALLOWLIST: dict[str, int] = {}
 
 
-def test_no_redundant_source_scans(spark):
+def test_no_redundant_source_scans(registry_facts):
     """No gated query's compiled plan scans any single file source more
     than audit.MAX_FILE_SCANS_PER_SOURCE times (the round-7 lesson:
     text_tfidf_pairs compiled to 18 corpus scans with zero ReusedExchange
@@ -356,15 +369,9 @@ def test_no_redundant_source_scans(spark):
     query listed in FILE_SCAN_ALLOWLIST with why its scans are genuinely
     distinct pruned reads.  Covers the driver=False extras too — a
     rotation must never promote an N-scan plan into the gate."""
-    from datapipeline_omnichanneltobigquery_spark.plans.queries import EXTRA_QUERIES, QUERIES
-
     offenders = {}
-    for name, fn in {**QUERIES, **EXTRA_QUERIES}.items():
-        try:
-            df = fn(spark, SF_DIR)
-        except Exception:
-            continue  # build errors are other tests' business
-        counts = audit.file_scan_counts(df)
+    for name, facts in _built(registry_facts, registry_facts):
+        counts = facts.file_scans
         worst = max(counts.values()) if counts else 0
         cap = FILE_SCAN_ALLOWLIST.get(name, audit.MAX_FILE_SCANS_PER_SOURCE)
         if worst > cap:
@@ -384,38 +391,37 @@ def test_jobless_builds(spark):
     assert jobs == dict.fromkeys(JOBLESS_BUILDS, 0)
 
 
-def test_every_gated_aggregate_combines_map_side(spark):
+def test_every_gated_aggregate_combines_map_side(registry_facts):
     """Spill/memory evidence for the wide aggregates (r5 VERDICT #6), made
     mechanical: every gated query whose plan carries a GROUPED final
     aggregate also carries partial/merge stages — the full pre-aggregation
     row stream never crosses an exchange uncombined.  A query that loses
     its partial stage (e.g. by aggregating on a non-deterministic column
     or disabling partial agg) fails here, not on a 100 TB shuffle."""
-    from datapipeline_omnichanneltobigquery_spark.plans.queries import QUERIES
-
     offenders = {}
-    for name, fn in QUERIES.items():
-        try:
-            df = fn(spark, SF_DIR)
-        except Exception:
-            continue  # build errors are other tests' business
-        final, partial = audit.partial_agg_audit(df)
+    for name, facts in _built(registry_facts, QUERIES):
+        final, partial = facts.partial_agg
         if final > 0 and partial == 0:
             offenders[name] = (final, partial)
     assert not offenders, offenders
 
 
-def _audit_table_row_names(path: str) -> set[str]:
-    """First-column names of the generated plan-audit markdown table."""
-    names = set()
+def _audit_table_rows(path: str) -> dict[str, str]:
+    """Query name -> row line of the generated plan-audit markdown table."""
+    rows = {}
     for line in open(path):
         if not line.startswith("| "):
             continue
         first = line.split("|")[1].strip()
         if first in ("query", "---"):
             continue
-        names.add(first)
-    return names
+        rows[first] = line.rstrip("\n")
+    return rows
+
+
+def _audit_table_row_names(path: str) -> set[str]:
+    """First-column names of the generated plan-audit markdown table."""
+    return set(_audit_table_rows(path))
 
 
 def test_plans_markdown_rows_match_registries():
@@ -424,7 +430,6 @@ def test_plans_markdown_rows_match_registries():
     PLANS_EXTRAS lagged 5 families behind EXTRA_QUERIES; the live CI
     audits never lagged, but the reviewable table did).  Regenerate with
     `python bench.py plans [--extras]` after any registry change."""
-    import os
 
     from datapipeline_omnichanneltobigquery_spark.plans.queries import (
         EXTRA_QUERIES,
@@ -444,6 +449,27 @@ def test_plans_markdown_rows_match_registries():
     )
 
 
+def test_plans_markdown_values_match_plan_facts(registry_facts):
+    """Every committed PLANS.md / PLANS_EXTRAS.md row equals the entry's
+    live plan facts rendered by bench.py's row formatter (bench.plans_row),
+    in every column but `codegen stages` (bench.py counts those on a
+    separate AQE-off rebuild).  The tables are generated on local[4] with 8
+    shuffle partitions at sf0.001, the test session's confs; regenerate
+    them with `python bench.py plans [--extras]` after a plan change."""
+    stale = {}
+    for table in ("PLANS.md", "PLANS_EXTRAS.md"):
+        for name, line in _audit_table_rows(os.path.join(bench.ROOT, table)).items():
+            facts = registry_facts.get(name)
+            if isinstance(facts, audit.PlanFacts):
+                codegen = line.split("|")[5].strip()  # the committed cell
+                live = bench.plans_row(name, facts, codegen)
+            else:
+                live = f"no plan facts: {facts!r}"
+            if live != line:
+                stale[name] = f"{name}:\n  committed {line}\n  live      {live}"
+    assert not stale, "\n".join(stale.values())
+
+
 def test_baseline_floors_file_is_live():
     """BASELINE_FLOORS.json (bench.py's worst_vs_floor source) parses,
     pins a scale factor, and names only real registry entries — a
@@ -452,7 +478,6 @@ def test_baseline_floors_file_is_live():
     so subset, not equality: a new family may lack a floor until the
     next idle re-record.)"""
     import json
-    import os
 
     from datapipeline_omnichanneltobigquery_spark.plans.queries import (
         EXTRA_QUERIES,
@@ -484,7 +509,6 @@ def test_coverage_header_counts_match_registry():
         QUERIES,
     )
 
-    import os
 
     cov = os.path.join(os.path.dirname(__file__), "..", "COVERAGE.md")
     head = open(cov).read().split("**Round-", 3)[1]
